@@ -49,11 +49,11 @@ def build_parser() -> argparse.ArgumentParser:
     ins = sub.add_parser(
         "inspect",
         help="inspect a stage catalog: stages, snapshot ids, row counts, "
-             "per-partition lineage (reference inspect_checkpoint.py analogue)",
+             "per-data-file lineage (reference inspect_checkpoint.py analogue)",
     )
     ins.add_argument("--workdir", required=True, help="catalog root")
     ins.add_argument("--stage", default=None,
-                     help="also print this stage's per-partition lineage metrics")
+                     help="also print this stage's per-data-file lineage metrics")
 
     rep = sub.add_parser(
         "report",

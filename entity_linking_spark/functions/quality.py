@@ -142,18 +142,24 @@ def top_word_fraction_agg(df, id_col: str, text_col) -> "DataFrame":  # noqa: F8
     nested filter), fine for document-sized inputs but quadratic-ish on
     book-length rows; this shape is O(words) scan + shuffle on (id,
     word), bounded per row.  Empty docs yield 0.0 (explode_outer keeps
-    them as a null-word row; the conditional aggregates ignore it)."""
+    them as a null-word row; the conditional aggregates ignore it), and
+    NULL text yields NULL, as in the column form."""
     ws = words(F.lower(_c(text_col)))
-    ex = df.select(F.col(id_col), F.explode_outer(ws).alias("__w"))
-    per_word = ex.groupBy(id_col, "__w").agg(F.count("*").alias("__c"))
-    return per_word.groupBy(id_col).agg(
+    # the NULL flag is projected before the explode, so the Generate
+    # carries (id, flag) per word, never the whole text column
+    ex = df.select(
+        F.col(id_col), _c(text_col).isNull().alias("__null"), ws.alias("__ws")
+    ).select(id_col, "__null", F.explode_outer("__ws").alias("__w"))
+    per_word = ex.groupBy(id_col, "__null", "__w").agg(F.count("*").alias("__c"))
+    return per_word.groupBy(id_col, "__null").agg(
         F.max(F.when(F.col("__w").isNotNull(), F.col("__c"))).alias("__mx"),
         F.sum(
             F.when(F.col("__w").isNotNull(), F.col("__c")).otherwise(F.lit(0))
         ).alias("__tot"),
     ).select(
         id_col,
-        F.when(F.col("__tot") == 0, F.lit(0.0))
+        F.when(F.col("__null"), F.lit(None).cast("double"))
+        .when(F.col("__tot") == 0, F.lit(0.0))
         .otherwise(F.col("__mx") / F.col("__tot"))
         .alias("top_word_frac"),
     )

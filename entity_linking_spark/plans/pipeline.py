@@ -169,10 +169,14 @@ def link_entities(
         ]
         # Plan selection mirrors Catalyst's broadcast-vs-shuffle decision,
         # but at the operator level: dimension-sized feature tables go
-        # through the indexed scorer (id-pair stream only).
+        # through the indexed scorer (id-pair stream only).  The sizes are
+        # the manifest counts the catalog just recorded (present on resume
+        # too) — no count job.
         if (
-            m_prep.count() <= cfg.broadcast_feature_rows
-            and e_prep.count() <= cfg.broadcast_feature_rows
+            cat.manifest_entry("mentions_prepared")["rows"]
+            <= cfg.broadcast_feature_rows
+            and cat.manifest_entry("entities_prepared")["rows"]
+            <= cfg.broadcast_feature_rows
         ):
             from entity_linking_spark.operators.scoring import score_pairs_broadcast
 

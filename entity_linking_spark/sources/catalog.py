@@ -35,6 +35,31 @@ def iceberg_available(spark: SparkSession) -> bool:
     return False
 
 
+def _hidden(name: str) -> bool:
+    """Spark's file-index filter: ``_``/``.``-prefixed names (``_SUCCESS``,
+    ``.crc`` sidecars, ``_metadata``) are not data, except ``_col=v``
+    partition directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _footer_counts(path: str) -> list[tuple[str, int]]:
+    """[(file, rows)] for every data file Spark's parquet reader would read
+    under ``path`` — recursive, so ``partitionBy`` sub-directories count —
+    with each row count read from the file's parquet footer.  The catalog's
+    one way of counting what it wrote on the parquet branch: no Spark job,
+    one footer read per file."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = sorted(d for d in dirnames if not _hidden(d))
+        for fn in sorted(filenames):
+            if not _hidden(fn):
+                f = os.path.join(dirpath, fn)
+                out.append((f, pq.read_metadata(f).num_rows))
+    return out
+
+
 class Catalog:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -149,15 +174,14 @@ class Catalog:
         partition_by: list[str] | None = None,
     ) -> str:
         """Write a stage table; returns its snapshot id and records
-        per-partition lineage metrics (north rule).
+        per-data-file lineage metrics (north rule).
 
-        Post-write accounting costs exactly ONE scan of the stage table:
-        the per-partition row counts are aggregated in a single job,
-        collected to the driver (tiny: one row per partition), and both
-        the manifest row count (their sum) and the lineage-metrics
-        parquet are derived from that collection.  (The r01 version
-        re-read the table twice — count + metrics — which at 100 TB is
-        two extra full scans per checkpoint.)"""
+        Parquet branch: post-write accounting runs NO Spark job.  The
+        row count of every data file the reader will see is taken from
+        its parquet footer (``_footer_counts``); the manifest row count
+        is their sum and the per-file counts are the lineage table,
+        written on the driver.  Iceberg branch: one scan of the written
+        table counts rows per read partition."""
         if self.use_iceberg:
             # helper columns stamped on EVERY Iceberg write path (write /
             # append / streaming sink — ADVICE r04): tagged appends
@@ -178,8 +202,8 @@ class Catalog:
             w.parquet(self._path(name))
         try:
             # drop any persisted plans over the old table contents — the
-            # CacheManager would otherwise substitute them into the
-            # post-write read below AND into later readers (see append)
+            # CacheManager would otherwise substitute them into later
+            # readers, the Iceberg count below included (see append)
             if self.use_iceberg:
                 self.spark.catalog.refreshTable(f"local.db.{name}")
             else:
@@ -188,15 +212,19 @@ class Catalog:
             pass  # mocked writers in tests have no real table to refresh
 
         snapshot_id = f"{name}-{int(time.time() * 1000)}"
-        per_part = (
-            self.read(name)
-            .withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        )
-        rows = sum(r["rows"] for r in per_part)
-        self._write_lineage_metrics(name, snapshot_id, per_part)
+        if self.use_iceberg:
+            per_part = [
+                (r["partition_id"], r["rows"], None)
+                for r in self.read(name)
+                .withColumn("partition_id", F.spark_partition_id())
+                .groupBy("partition_id")
+                .agg(F.count("*").alias("rows"))
+                .collect()
+            ]
+            rows = sum(n for _, n, _ in per_part)
+            self._write_lineage_metrics(name, snapshot_id, per_part)
+        else:
+            rows = self._parquet_lineage(name, snapshot_id)
         self._update_manifest(
             name,
             lambda _old: {
@@ -209,17 +237,79 @@ class Catalog:
         )
         return snapshot_id
 
+    def _parquet_lineage(self, name: str, snapshot_id: str) -> int:
+        """Footer-count every data file of parquet stage ``name``, record
+        the counts as its lineage, and return their sum.  Driver-only: one
+        footer read per file, no Spark job."""
+        path = self._path(name)
+        files = _footer_counts(path)
+        self._write_lineage_metrics(
+            name,
+            snapshot_id,
+            [(i, n, os.path.relpath(f, path)) for i, (f, n) in enumerate(files)],
+        )
+        return sum(n for _, n in files)
+
     def _write_lineage_metrics(self, name: str, snapshot_id: str, per_part) -> None:
-        """Per-partition row counts for the stage table — the lineage
-        metric the north rule requires per stage.  ``per_part`` is the
-        already-collected [(partition_id, rows)] list; no table re-read."""
-        metrics = self.spark.createDataFrame(
-            [(int(r["partition_id"]), int(r["rows"]), name, snapshot_id) for r in per_part],
-            "partition_id int, rows bigint, stage string, snapshot_id string",
+        """Lineage row counts for the stage table — the metric the north
+        rule requires per stage.  ``per_part`` is the driver-side
+        [(partition_id, rows, file)] list; the table is a few rows, so it
+        is written with pyarrow on the driver, never as a Spark job.  The
+        file lands via a hidden temp name + ``os.replace``, so a reader
+        never sees a half-written table."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        ids, counts, files = zip(*per_part) if per_part else ((), (), ())
+        table = pa.table(
+            {
+                "partition_id": pa.array(ids, pa.int32()),
+                "rows": pa.array(counts, pa.int64()),
+                "stage": pa.array([name] * len(ids), pa.string()),
+                "snapshot_id": pa.array([snapshot_id] * len(ids), pa.string()),
+                "file": pa.array(files, pa.string()),
+            }
         )
-        metrics.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.root, "_metrics", name)
-        )
+        out = os.path.join(self.root, "_metrics", name)
+        os.makedirs(out, exist_ok=True)
+        tmp = os.path.join(out, f".{uuid.uuid4().hex}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(out, "lineage.parquet"))
+        for fn in os.listdir(out):
+            # part files of a lineage table Spark wrote before
+            if fn != "lineage.parquet" and not _hidden(fn):
+                os.remove(os.path.join(out, fn))
+
+    def _land_parquet(
+        self, name: str, df: DataFrame, prefix: str, snapshot_id: str
+    ) -> int:
+        """Growth primitive of the parquet branch (``append`` and the
+        streaming sink): land ``df`` as stage ``name``'s
+        ``{prefix}-NNNNN.parquet`` files, replacing any earlier files under
+        that prefix, and re-record the stage's lineage.  Returns the rows
+        landed, summed from the part files' footers before the move — no
+        persist, no count job.  The files go through a scratch dir and
+        POSIX ``os.replace`` (local/NFS/HDFS-mounted paths only; see
+        ``foreach_batch_sink``)."""
+        import glob
+        import shutil
+
+        path = self._path(name)
+        os.makedirs(path, exist_ok=True)
+        scratch = path + f".__{prefix}.inprogress"
+        try:
+            df.write.mode("overwrite").parquet(scratch)
+            parts = _footer_counts(scratch)
+            for old in glob.glob(os.path.join(path, f"{prefix}-*.parquet")):
+                os.remove(old)
+            for i, (p, _) in enumerate(parts):
+                os.replace(p, os.path.join(path, f"{prefix}-{i:05d}.parquet"))
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
+        self._parquet_lineage(name, snapshot_id)
+        return sum(n for _, n in parts)
 
     def append(self, name: str, df: DataFrame, tag: str | None = None) -> str:
         """Append rows to a stage table (creating it if absent); returns
@@ -241,11 +331,13 @@ class Catalog:
         ``os.replace`` (same local-path constraint as
         ``foreach_batch_sink``; deploy Iceberg on object stores).
 
-        Accounting: manifest rows += increment count (one count over the
-        persisted increment, no table re-scan).  Per-partition lineage
-        metrics (_metrics) are refreshed by full ``write()`` checkpoints,
-        not appends — re-deriving them here would re-scan the whole
-        stage, exactly the cost appends exist to avoid.
+        Accounting: manifest rows += increment count.  Parquet branch: the
+        count is summed from the footers of the increment's part files
+        (``_footer_counts`` on the scratch dir, before the move) — zero
+        scans, no persist — and the stage's per-file lineage (_metrics)
+        is re-recorded from the footers after the move (driver-side, one
+        footer read per file).  Iceberg branch: one count over the
+        persisted increment; its lineage is refreshed by ``write()`` only.
 
         Cache coherence: the append ends with ``refreshByPath`` — without
         it, any PERSISTED plan over this stage (e.g. the previous
@@ -253,20 +345,19 @@ class Catalog:
         Spark's CacheManager into later reads of the same path, serving
         the pre-append file listing (measured: increment C missed every
         doc absorbed from increment B)."""
-        import glob
-        import shutil
         import uuid
 
-        df.persist()
         seq = int(time.time() * 1000)
         # untagged prefix carries a uuid suffix: two untagged appends in
         # the same millisecond (or from concurrent drivers) must never
         # share a prefix — the glob cleanup would delete the earlier
         # increment's files (ADVICE r04)
         prefix = f"t{tag}" if tag is not None else f"a{seq}-{uuid.uuid4().hex[:8]}"
-        try:
-            n = df.count()
-            if self.use_iceberg:
+        snapshot = f"{name}-{prefix}-{seq}"
+        if self.use_iceberg:
+            df.persist()
+            try:
+                n = df.count()
                 table = f"local.db.{name}"
                 # __append_tag/__batch_id stamped on every write path so
                 # any growth-mode mix keeps one table schema (ADVICE r04)
@@ -307,23 +398,10 @@ class Catalog:
                         )
                     else:
                         out.writeTo(table).append()
-            else:
-                path = self._path(name)
-                os.makedirs(path, exist_ok=True)
-                scratch = path + f".__{prefix}.inprogress"
-                try:
-                    df.write.mode("overwrite").parquet(scratch)
-                    for old in glob.glob(os.path.join(path, f"{prefix}-*.parquet")):
-                        os.remove(old)
-                    parts = sorted(glob.glob(os.path.join(scratch, "part-*")))
-                    for i, p in enumerate(parts):
-                        os.replace(
-                            p, os.path.join(path, f"{prefix}-{i:05d}.parquet")
-                        )
-                finally:
-                    shutil.rmtree(scratch, ignore_errors=True)
-        finally:
-            df.unpersist()
+            finally:
+                df.unpersist()
+        else:
+            n = self._land_parquet(name, df, prefix, snapshot)
         try:
             if self.use_iceberg:
                 self.spark.catalog.refreshTable(f"local.db.{name}")
@@ -331,7 +409,6 @@ class Catalog:
                 self.spark.catalog.refreshByPath(self._path(name))
         except Exception:
             pass  # mocked writers in tests have no real table to refresh
-        snapshot = f"{name}-{prefix}-{seq}"
 
         def mutate(entry):
             entry = entry or {"schema": df.schema.simpleString(), "rows": 0}
@@ -382,17 +459,18 @@ class Catalog:
         recorded row count — the pre-existing rows stay readable and
         counted (ADVICE r03 migration gap).
 
-        Each batch costs one write + one count over the PERSISTED batch
-        (no source re-read); the snapshot id records the micro-batch id,
-        and `complete` stays true after every batch so a killed stream
+        Each batch costs one write.  Parquet branch: the batch's row
+        count is summed from its part files' footers before the move (no
+        persist, no count job) and the per-file lineage is re-recorded,
+        as in ``append``; Iceberg branch: one count over the PERSISTED
+        batch.  The snapshot id records the micro-batch id, and
+        `complete` stays true after every batch so a killed stream
         resumes from both the stream checkpoint AND a readable stage."""
-        import glob
-        import shutil
 
         def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.persist()
-            try:
-                if self.use_iceberg:
+            if self.use_iceberg:
+                batch_df.persist()
+                try:
                     tagged = batch_df.withColumn(
                         "__batch_id", F.lit(batch_id)
                     ).withColumn("__append_tag", F.lit(None).cast("string"))
@@ -425,26 +503,13 @@ class Catalog:
                             F.col("__batch_id") == F.lit(batch_id)
                         )
                     n = batch_df.count()
-                else:
-                    path = self._path(name)
-                    os.makedirs(path, exist_ok=True)
-                    scratch = path + f".__b{batch_id}.inprogress"
-                    try:
-                        batch_df.write.mode("overwrite").parquet(scratch)
-                        n = batch_df.count()
-                        for old in glob.glob(
-                            os.path.join(path, f"b{batch_id}-*.parquet")
-                        ):
-                            os.remove(old)
-                        parts = sorted(glob.glob(os.path.join(scratch, "part-*")))
-                        for i, p in enumerate(parts):
-                            os.replace(
-                                p, os.path.join(path, f"b{batch_id}-{i:05d}.parquet")
-                            )
-                    finally:
-                        shutil.rmtree(scratch, ignore_errors=True)
-            finally:
-                batch_df.unpersist()
+                finally:
+                    batch_df.unpersist()
+            else:
+                n = self._land_parquet(
+                    name, batch_df, f"b{batch_id}", f"{name}-b{batch_id}"
+                )
+
             def mutate(entry):
                 entry = entry or {
                     "schema": batch_df.schema.simpleString(),

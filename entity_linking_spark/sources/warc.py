@@ -39,8 +39,9 @@ def decode_warc(content: bytes) -> list[dict]:
     line, ``Content-Length`` octets of block, then CRLF CRLF.  Headers
     are case-insensitive per the spec.  A ``response`` record's block
     is an HTTP message — headers split off at the first CRLFCRLF.
-    Raises ValueError on a malformed stream (bad magic, missing
-    Content-Length, truncated block) rather than silently dropping
+    Raises ValueError on a malformed stream (bad magic, unterminated
+    header block, missing Content-Length, truncated block) rather than
+    silently dropping
     tail records."""
     if content[:2] == _GZIP_MAGIC:
         content = gzip.decompress(content)
@@ -54,7 +55,11 @@ def decode_warc(content: bytes) -> list[dict]:
             break
         if not content[pos:pos + 5] == b"WARC/":
             raise ValueError(f"malformed WARC: expected version at byte {pos}")
-        hdr_end = content.index(b"\r\n\r\n", pos)
+        hdr_end = content.find(b"\r\n\r\n", pos)
+        if hdr_end < 0:
+            raise ValueError(
+                f"malformed WARC: unterminated header block at byte {pos}"
+            )
         headers: dict[str, str] = {}
         lines = content[pos:hdr_end].decode("utf-8", "replace").split("\r\n")
         for line in lines[1:]:

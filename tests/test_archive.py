@@ -93,6 +93,13 @@ def test_warc_malformed_raises():
         decode_warc(b"NOTWARC/1.0\r\n\r\n")
     with pytest.raises(ValueError, match="truncated"):
         decode_warc(blob[:-8])
+    # a header block with no CRLFCRLF terminator names its start offset,
+    # not a bare "subsection not found" from bytes.index
+    with pytest.raises(
+        ValueError,
+        match=f"unterminated header block at byte {len(blob)}",
+    ):
+        decode_warc(blob + b"WARC/1.0\r\nContent-Length: 3\r\n")
 
 
 def test_read_warc_records_from_files(spark, tmp_path):

@@ -96,7 +96,7 @@ def test_mean_word_length(spark):
 
 def test_top_word_fraction_agg_matches_hof(spark):
     """The explode+groupBy twin must equal the HOF column form on the
-    same corpus — including empty docs (0.0) and ties."""
+    same corpus — including empty docs (0.0), NULL text (NULL) and ties."""
     from entity_linking_spark.functions.quality import (
         top_word_fraction,
         top_word_fraction_agg,
@@ -109,6 +109,7 @@ def test_top_word_fraction_agg_matches_hof(spark):
         (3, "x y x y"),
         (4, "one two three"),
         (5, "Spam SPAM spam ok"),
+        (6, None),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
     hof = {r["id"]: r["f"] for r in
@@ -116,7 +117,8 @@ def test_top_word_fraction_agg_matches_hof(spark):
     agg = {r["id"]: r["top_word_frac"] for r in
            top_word_fraction_agg(df, "id", "text").collect()}
     assert set(hof) == set(agg)
-    for i in hof:
+    assert hof[6] is None and agg[6] is None
+    for i in hof.keys() - {6}:
         assert abs(hof[i] - agg[i]) < 1e-12, (i, hof[i], agg[i])
 
 
