@@ -41,6 +41,7 @@ from entity_linking_spark.functions.hashing import (
     minhash_signature,
 )
 from entity_linking_spark.functions.text import normalize_text
+from entity_linking_spark.operators._cache import track
 
 
 @dataclass(frozen=True)
@@ -76,24 +77,42 @@ def blocking_keys(
 
     Computed entirely in the scan projection (JVM expressions, no Python,
     no shuffle); the explode multiplies rows by ~(1 + top_k + bands).
+
+    ``norm``, ``grams`` and ``sig`` are projected as columns in three
+    successive selects, each once per row (CLAUDE.md rule 6): every one
+    feeds several key expressions — the band keys slice ``sig`` once per
+    band — and higher-order-function trees get no subexpression
+    elimination, so inlining them ran the MinHash aggregate once per band
+    and the normalize/n-gram chain once per use.  Catalyst's
+    CollapseProject keeps the three Projects apart because each expensive
+    column is referenced more than once (scripts/explain_audit.py asserts
+    one ``aggregate`` and one ``regexp_replace`` in the plan).
     """
-    norm = normalize_text(F.col(text_col))
-    grams = char_ngrams(norm, n=conf.ngram_n, distinct=True)
+    normed = df.select(
+        F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("norm")
+    )
+    with_grams = normed.select(
+        "id", "norm", char_ngrams("norm", n=conf.ngram_n, distinct=True).alias("grams")
+    )
+    with_sig = with_grams.select(
+        "id",
+        "norm",
+        "grams",
+        minhash_signature("grams", num_hashes=conf.minhash_hashes).alias("sig"),
+    )
     # min-K deterministic n-gram sample: order by xxhash64, keep top_k.
     sampled = F.slice(
         F.array_sort(
-            F.transform(grams, lambda g: F.struct(F.xxhash64(g).alias("h"), g.alias("g")))
+            F.transform("grams", lambda g: F.struct(F.xxhash64(g).alias("h"), g.alias("g")))
         ),
         1,
         conf.ngram_top_k,
     )
     gram_keys = F.transform(sampled, lambda s: F.concat(F.lit("g:"), s["g"]))
-
-    sig = minhash_signature(grams, num_hashes=conf.minhash_hashes)
-    band_keys = lsh_band_keys(sig, bands=conf.lsh_bands, rows_per_band=conf.rows_per_band)
+    band_keys = lsh_band_keys("sig", bands=conf.lsh_bands, rows_per_band=conf.rows_per_band)
 
     all_keys = F.concat(
-        F.array(F.concat(F.lit("x:"), norm)),
+        F.array(F.concat(F.lit("x:"), F.col("norm"))),
         gram_keys,
         band_keys,
     )
@@ -102,12 +121,9 @@ def blocking_keys(
             F.filter(F.array_distinct(all_keys), lambda k: k != F.lit("x:")),
             lambda k: F.xxhash64(k),
         )
-        return df.select(
-            F.col(id_col).alias("id"), F.explode(compacted).alias("key")
-        )
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(all_keys)).alias("key"),
+        return with_sig.select("id", F.explode(compacted).alias("key"))
+    return with_sig.select(
+        "id", F.explode(F.array_distinct(all_keys)).alias("key")
     ).where(F.col("key") != "x:")
 
 
@@ -146,25 +162,16 @@ def candidate_pairs(
       semi/anti probes); reruns reuse the stage (``resume=True``), so
       the two frequency aggregations are paid once per corpus version.
 
-    Both key streams are persisted here (via the tracked-cache registry,
+    Catalog-mode callers pass stage reads (``link_entities`` checkpoints
+    both key streams with ``Catalog.get_or_compute``), so the streams are
+    parquet scans and nothing is cached here.  In collect mode both key
+    streams are persisted (via the tracked-cache registry,
     operators/_cache.py — release with ``cache_scope``/``release_cached``
     once the pair table is materialized): the plan consumes each 3-5
     times (frequency agg, hot/cold split, joins), and the MinHash
     signature expressions feeding them are expensive to recompute
     (measured ~10× end-to-end speedup at bench scale).
     """
-    from entity_linking_spark.operators._cache import track
-
-    mention_keys = track(mention_keys)
-    entity_keys = track(entity_keys)
-    # Eager materialization: the downstream plan consumes each stream from
-    # several concurrent branches (broadcast subqueries + hot/cold splits);
-    # populating the cache first prevents racing branches from redundantly
-    # recomputing the expensive MinHash key expressions (measured ~5×
-    # end-to-end difference at bench scale).  At production scale these
-    # streams are checkpointed stage tables anyway (sources/catalog.py).
-    mention_keys.count()
-    entity_keys.count()
 
     def _key_stats() -> DataFrame:
         mf = mention_keys.groupBy("key").agg(F.count("*").alias("m_freq"))
@@ -265,6 +272,15 @@ def candidate_pairs(
     # Collect mode — same inverted stop-key guard as stage mode: only the
     # tiny over-cap set is broadcast (anti-join); no under-cap /
     # existence broadcast (VERDICT r04 #1).
+    mention_keys = track(mention_keys)
+    entity_keys = track(entity_keys)
+    # Eager materialization: the downstream plan consumes each stream from
+    # several concurrent branches (broadcast subqueries + hot/cold splits);
+    # populating the cache first prevents racing branches from redundantly
+    # recomputing the expensive MinHash key expressions (measured ~5×
+    # end-to-end difference at bench scale).
+    mention_keys.count()
+    entity_keys.count()
     hot_df = _key_stats().where(is_hot).select("key", salt_mentions)
 
     m = mention_keys.withColumnRenamed("id", "mention_id")

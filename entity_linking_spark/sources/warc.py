@@ -25,8 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 WARC_RECORD_SCHEMA = (
-    "archive string, record_type string, url string, warc_date string, "
-    "http_headers string, payload binary, n_bytes bigint"
+    "archive string, record_ordinal int, record_type string, url string, "
+    "warc_date string, http_headers string, payload binary, n_bytes bigint"
 )
 
 _GZIP_MAGIC = b"\x1f\x8b"
@@ -117,12 +117,13 @@ def encode_warc(records: list[dict], per_record_gzip: bool = False) -> bytes:
 def _expand_warcs(batches):
     for pdf in batches:
         out: dict[str, list] = {
-            "archive": [], "record_type": [], "url": [], "warc_date": [],
-            "http_headers": [], "payload": [], "n_bytes": [],
+            "archive": [], "record_ordinal": [], "record_type": [], "url": [],
+            "warc_date": [], "http_headers": [], "payload": [], "n_bytes": [],
         }
         for apath, data in zip(pdf["path"], pdf["content"]):
-            for rec in decode_warc(bytes(data)):
+            for ordinal, rec in enumerate(decode_warc(bytes(data))):
                 out["archive"].append(apath)
+                out["record_ordinal"].append(ordinal)
                 out["record_type"].append(rec["record_type"])
                 out["url"].append(rec["url"])
                 out["warc_date"].append(rec["warc_date"])
@@ -131,6 +132,7 @@ def _expand_warcs(batches):
                 out["n_bytes"].append(len(rec["payload"]))
         yield pd.DataFrame({
             "archive": pd.Series(out["archive"], dtype=object),
+            "record_ordinal": pd.Series(out["record_ordinal"], dtype="int32"),
             "record_type": pd.Series(out["record_type"], dtype=object),
             "url": pd.Series(out["url"], dtype=object),
             "warc_date": pd.Series(out["warc_date"], dtype=object),
@@ -141,9 +143,10 @@ def _expand_warcs(batches):
 
 
 def read_warc_records(spark: SparkSession, path_glob: str) -> DataFrame:
-    """(archive, record_type, url, warc_date, http_headers, payload,
-    n_bytes) — one row per WARC record across every archive matching
-    ``path_glob``."""
+    """(archive, record_ordinal, record_type, url, warc_date,
+    http_headers, payload, n_bytes) — one row per WARC record across
+    every archive matching ``path_glob``; ``record_ordinal`` is the
+    record's 0-based position in its archive."""
     archives = spark.read.format("binaryFile").load(path_glob)
     return archives.select("path", "content").mapInPandas(
         _expand_warcs, WARC_RECORD_SCHEMA
@@ -169,14 +172,16 @@ def docs_from_response_records(records: DataFrame) -> DataFrame:
     ``plans/corpus_clean.py:clean_corpus`` (whose URL-dedup stage then
     collapses recrawls of the same canonical page).
 
-    ``id`` is the xxhash64 of (url, warc_date) — deterministic across
-    runs and distinct across recrawls of one url; bodies decode as
-    UTF-8 with replacement (charset sniffing beyond UTF-8 is a decoder
-    seam, same policy as the HTTP envelope split)."""
+    ``id`` is the xxhash64 of (url, warc_date, archive, record_ordinal)
+    — deterministic across runs and distinct across recrawls of one url,
+    including revisits captured in the same second (WARC-Date has
+    one-second resolution).  Bodies decode as UTF-8 with replacement:
+    invalid byte sequences become U+FFFD (charset sniffing beyond UTF-8
+    is a decoder seam, same policy as the HTTP envelope split)."""
     from pyspark.sql import functions as F
 
     return records.where(F.col("record_type") == "response").select(
-        F.xxhash64("url", "warc_date").alias("id"),
+        F.xxhash64("url", "warc_date", "archive", "record_ordinal").alias("id"),
         "url",
-        F.col("payload").cast("string").alias("text"),
+        F.make_valid_utf8(F.col("payload").cast("string")).alias("text"),
     )

@@ -260,8 +260,21 @@ def main() -> int:
         catalog=cat,
     )
     stage_plan = p_stage._jdf.queryExecution().executedPlan().toString()
-    lines.append("## blocking (stage-table hot-key mode)")
+    # blocking_keys projects norm/grams/sig once per row (CLAUDE.md rule
+    # 6): one MinHash aggregate and one normalize regexp per plan, in
+    # both key encodings
+    key_plans = [
+        blocking_keys(m, "mention_id", "s", BlockingConfig(compact_keys=compact))
+        ._jdf.queryExecution().executedPlan().toString()
+        for compact in (False, True)
+    ]
+    lines.append("## blocking (key generation, stage-table hot-key mode)")
     for desc, ok in [
+        ("blocking_keys computes each expensive column once per row: "
+         "exactly one aggregate( and one regexp_replace( in the plan "
+         "(compact_keys False and True)",
+         all(p.count("aggregate(") == 1 and p.count("regexp_replace(") == 1
+             for p in key_plans)),
         ("hot-key classification is distributed: no driver-collected key "
          "list re-enters the plan (no LocalTableScan / ExistingRDD[key)",
          "LocalTableScan" not in stage_plan and "ExistingRDD[key" not in stage_plan),

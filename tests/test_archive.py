@@ -159,6 +159,56 @@ def test_docs_from_response_records_feeds_clean_corpus(spark, tmp_path):
            urls == {"http://ex.org/a", "http://ex.org/b"}
 
 
+def test_docs_from_response_records_decodes_invalid_utf8(spark, tmp_path):
+    """Invalid UTF-8 in a response body becomes U+FFFD inside Spark, not
+    a string carrying the raw bytes (collect() alone would hide those:
+    the JVM-to-Python conversion replaces them on the way out)."""
+    from pyspark.sql import functions as F
+
+    from entity_linking_spark.sources.warc import (
+        docs_from_response_records, encode_warc, read_warc_records,
+    )
+
+    body = b"caf\xe9 ok \xff\xfe end \xc3\xa9"  # latin-1 é, stray bytes, valid é
+    (tmp_path / "bad.warc").write_bytes(encode_warc([{
+        "record_type": "response", "url": "http://ex.org/x",
+        "warc_date": "2024-01-01T00:00:00Z",
+        "http_headers": "HTTP/1.1 200 OK", "payload": body,
+    }]))
+    docs = docs_from_response_records(
+        read_warc_records(spark, str(tmp_path / "bad.warc")))
+    [row] = docs.select(
+        "text", F.is_valid_utf8("text").alias("valid"),
+        F.octet_length("text").alias("n_bytes"),
+    ).collect()
+    assert row["valid"]
+    assert row["n_bytes"] == len(body.decode("utf-8", "replace").encode())
+    assert row["text"] == body.decode("utf-8", "replace")
+    assert row["text"].count("\ufffd") == 3 and row["text"].endswith("end \u00e9")
+
+
+def test_same_second_revisits_get_distinct_ids(spark, tmp_path):
+    """Two response records of one URL with the same WARC-Date (a
+    revisit inside one second) — in one archive and across two archives
+    — still get four distinct ids, stable across reads."""
+    from entity_linking_spark.sources.warc import (
+        docs_from_response_records, encode_warc, read_warc_records,
+    )
+
+    recs = [{"record_type": "response", "url": "http://ex.org/a",
+             "warc_date": "2024-01-01T00:00:00Z",
+             "http_headers": "HTTP/1.1 200 OK",
+             "payload": f"capture {j}".encode()} for j in range(2)]
+    (tmp_path / "one.warc").write_bytes(encode_warc(recs))
+    (tmp_path / "two.warc").write_bytes(encode_warc(recs))
+    records = read_warc_records(spark, str(tmp_path / "*.warc"))
+    assert sorted(r["record_ordinal"] for r in records.collect()) == [0, 0, 1, 1]
+    ids = [r["id"] for r in docs_from_response_records(records).collect()]
+    assert len(ids) == 4 and len(set(ids)) == 4
+    again = {r["id"] for r in docs_from_response_records(records).collect()}
+    assert again == set(ids)
+
+
 def test_cli_clean_warc_mode(spark, tmp_path, capsys):
     """cli.py clean --warc cleans a crawl archive end-to-end."""
     import json as _json

@@ -1,6 +1,8 @@
 """Blocking recall vs the exhaustive cross-join oracle
 (reference src/eval_zeshel.py:44 is the oracle's semantics)."""
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -215,3 +217,87 @@ def test_stop_key_cap_drops_hot_keys(spark):
         bk(m, "mention_id", "s", conf), bk(e, "entity_id", "s", conf), conf
     )
     assert pairs.count() == 0  # every key exceeds the stop-key cap
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("compact", [False, True])
+def test_blocking_keys_plan_computes_each_expensive_column_once(spark, compact):
+    """norm, grams and sig are projected once per row: the executed plan
+    holds one MinHash ``aggregate`` and one ``regexp_replace`` (the
+    normalize chain).  Inlining them into every key expression ran the
+    aggregate once per LSH band and the normalize chain once per use —
+    HOF trees get no subexpression elimination (CLAUDE.md rule 6)."""
+    df = spark.createDataFrame([(1, "acme corp")], "id long, s string")
+    plan = _executed_plan(
+        blocking_keys(df, "id", "s", BlockingConfig(compact_keys=compact))
+    )
+    assert plan.count("aggregate(") == 1, plan
+    assert plan.count("regexp_replace(") == 1, plan
+
+
+# sha256 of the sorted "id<TAB>key" lines blocking_keys emitted for
+# _PARITY_ROWS before the key columns were projected once per row — the
+# rewrite must emit exactly the same (id, key) rows
+_PARITY_DIGESTS = {
+    False: (88, "4cc87e81d3b2e108d7e1af1c63a4f2a84961e453084e775b9525c7a4175a1d6f"),
+    True: (88, "f323ab39d04e77e5d4d98fdb3147833ae9e4cd248e2da32d1dea5cda9f864d73"),
+}
+_PARITY_ROWS = [
+    (1, None),                                   # NULL surface
+    (2, "ab"),                                   # shorter than ngram_n
+    (3, "  Acme   Widget\tCorp "),               # whitespace to normalize
+    (4, "J. R. R. Tolkien"),                     # multi-token alias
+    (5, ""),
+    (6, "acme widget corporation"),
+    (7, "Zürich Versicherungs-Gesellschaft AG"),
+]
+
+
+@pytest.mark.parametrize("compact", [False, True])
+def test_blocking_keys_match_golden_digest(spark, compact):
+    df = spark.createDataFrame(_PARITY_ROWS, "id long, s string")
+    rows = blocking_keys(df, "id", "s", BlockingConfig(compact_keys=compact)).collect()
+    lines = sorted(f"{r['id']}\t{r['key']}" for r in rows)
+    digest = hashlib.sha256("\n".join(lines).encode()).hexdigest()
+    assert (len(lines), digest) == _PARITY_DIGESTS[compact]
+
+
+def test_catalog_mode_caches_nothing(spark, tmp_path):
+    """Catalog-mode callers pass stage reads (parquet scans), so
+    candidate_pairs must not persist them: the tracked-cache registry is
+    unchanged and the plan has no InMemoryRelation.  Collect mode still
+    tracks (and caches) both streams."""
+    from entity_linking_spark.operators._cache import _tracked, cache_scope
+    from entity_linking_spark.sources.catalog import Catalog
+
+    m = spark.createDataFrame(
+        [(f"m{i}", "aaaa bbbb") for i in range(6)], "mention_id string, s string"
+    )
+    e = spark.createDataFrame(
+        [(f"e{i}", "aaaa bbbc") for i in range(6)], "entity_id string, s string"
+    )
+    conf = BlockingConfig()
+    cat = Catalog(spark, str(tmp_path / "stages"))
+    mk = cat.get_or_compute(
+        "mention_blocking_keys", lambda: blocking_keys(m, "mention_id", "s", conf)
+    )
+    ek = cat.get_or_compute(
+        "entity_blocking_keys", lambda: blocking_keys(e, "entity_id", "s", conf)
+    )
+
+    n_tracked = len(_tracked())
+    p_stage = candidate_pairs(mk, ek, conf, catalog=cat)
+    assert len(_tracked()) == n_tracked
+    assert "InMemoryRelation" not in _executed_plan(p_stage)
+
+    with cache_scope():
+        p_collect = candidate_pairs(mk, ek, conf)
+        assert len(_tracked()) == n_tracked + 2
+        assert "InMemoryRelation" in _executed_plan(p_collect)
+        a = p_stage.select("mention_id", "entity_id")
+        b = p_collect.select("mention_id", "entity_id")
+        assert a.count() == 36
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
