@@ -16,6 +16,15 @@ failing, so a scope that closes "too early" only costs recompute time,
 never correctness.  One-shot jobs that exit the JVM after a single query
 need neither.
 
+WHAT IS TRACKED: ``track`` covers ``persist`` — frames an operator reuses
+inside one plan.  It does NOT cover lineage cuts: the ``localCheckpoint``
+rounds of ``connected_components`` and the stage outputs of
+``clean_corpus`` are checkpointed RDDs that Spark's ContextCleaner
+unpersists once nothing references them.  A scope never releases them,
+and a frame built on a cut keeps its data after the scope closes (a
+persist does not shorten the logical plan; a cut does, which is why a
+multi-stage composition cuts instead of persisting).
+
 THREADING (ADVICE r03): the registry is ``threading.local`` — drivers
 that submit jobs from parallel threads (a normal Spark pattern) get one
 independent registry per thread, so concurrent ``cache_scope()`` blocks

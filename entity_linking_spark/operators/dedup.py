@@ -74,6 +74,10 @@ def _max_partition_bytes(df: DataFrame) -> int:
     return n
 
 
+# Spark's size estimate for a leaf it cannot size (spark.sql.defaultSizeInBytes)
+_UNKNOWN_SIZE = (1 << 63) - 1
+
+
 def _parallelize_scan(df: DataFrame) -> DataFrame:
     """Small-input guard for CPU-heavy signature scans.
 
@@ -99,9 +103,10 @@ def _parallelize_scan(df: DataFrame) -> DataFrame:
     input files is NOT assumed small (ADVICE r04 — JDBC / Range / V2
     sources report none but can be arbitrarily large): only frames
     whose logical leaves are bounded by construction (LocalRelation /
-    LogicalRDD, or an InMemoryRelation whose size estimate says fewer
-    than p splits) are widened; everything else passes through — see
-    the branch comments below.  If ANY file is NOT locally statable
+    an unsized LogicalRDD), or sized leaves (an InMemoryRelation or a
+    checkpointed LogicalRDD) whose size estimate says fewer than p
+    splits, are widened; everything else passes through — see the
+    branch comments below.  If ANY file is NOT locally statable
     (object-store URI), the guard STANDS DOWN and passes the frame
     through — a few
     huge S3 files are many byte-sized splits, and guessing low here
@@ -123,37 +128,45 @@ def _parallelize_scan(df: DataFrame) -> DataFrame:
         # sources report no input files but can be arbitrarily large — an
         # unconditional repartition would inject a full-input shuffle.
         # Widen ONLY frames whose leaves say bounded-by-construction:
-        # LocalRelation / LogicalRDD — createDataFrame rows (Python
-        # createDataFrame parallelizes a collected local batch) or a
-        # foreachBatch micro-batch (trigger-bounded, and usually starved
-        # — widening is exactly what the streaming ingest wants).
-        # Anything else (JDBC relation, Range, a V2 source) can be
-        # arbitrarily large and passes through untouched.  Known hole:
-        # df.checkpoint() results and createDataFrame(<big RDD>) also
-        # leave LogicalRDD leaves and would eat the repartition — the
-        # engine's own scale convention keeps corpus-sized inputs
-        # file-backed or catalog stages (CLAUDE.md production shapes),
-        # where the split-estimate path below governs instead.  A cached
-        # frame (InMemoryRelation leaf — a persisted createDataFrame
-        # corpus is normal caller behavior) is widened only when its
-        # optimizer size estimate says it would have been fewer than p
-        # file splits: a starved small cache gets the cheap repartition
-        # back, a big cache is never force-shuffled.  Leaf inspection is
-        # a logical-plan walk — no RDD conversion (the r03
-        # partition-count probe forced physical planning per call; the
+        # LocalRelation, or a LogicalRDD with UNKNOWN size (Long.MaxValue
+        # — createDataFrame rows, which Python parallelizes from a
+        # collected local batch, or a foreachBatch micro-batch: trigger-
+        # bounded and usually starved, so widening is exactly what the
+        # streaming ingest wants).  Anything else (JDBC relation, Range, a
+        # V2 source) can be arbitrarily large and passes through untouched.
+        # Sized leaves are widened only when the optimizer's size estimate
+        # says the frame would have been fewer than p file splits, so a
+        # starved small input gets the cheap repartition back and a big
+        # one is never force-shuffled:
+        # - a cached frame (InMemoryRelation — a persisted createDataFrame
+        #   corpus is normal caller behavior);
+        # - a LogicalRDD with a FINITE size: a (local)checkpoint of a
+        #   planned frame keeps its origin plan's stats.  This closes the
+        #   old known hole where every checkpoint (clean_corpus stage
+        #   cuts, a caller's df.checkpoint()) ate the repartition however
+        #   big it was.
+        # Leaf inspection is a logical-plan walk — no RDD conversion (the
+        # r03 partition-count probe forced physical planning per call; the
         # no-RDD invariant is pytest-gated).
         try:
             plan = df._jdf.queryExecution().optimizedPlan()
             leaves = plan.collectLeaves()
-            names = {
-                leaves.apply(i).nodeName() for i in range(leaves.size())
-            }
+            kinds = set()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                kind = leaf.nodeName()
+                if kind == "LogicalRDD" and (
+                    int(str(leaf.stats().sizeInBytes())) < _UNKNOWN_SIZE
+                ):
+                    kind = "sized LogicalRDD"
+                kinds.add(kind)
         except Exception:
             return df  # un-introspectable (e.g. Connect): never guess
         bounded = {"LocalRelation", "OneRowRelation", "LogicalRDD"}
-        if names and names <= bounded:
+        sized = {"InMemoryRelation", "sized LogicalRDD"}
+        if kinds and kinds <= bounded:
             return df.repartition(p)
-        if names and names <= bounded | {"InMemoryRelation"}:
+        if kinds and kinds <= bounded | sized:
             try:
                 size = int(str(plan.stats().sizeInBytes()))
             except Exception:

@@ -20,20 +20,30 @@ per-stage accounting — a stage that silently drops 60% of the corpus
 is a bug report, not a cleaning step.  Each count is one Spark action,
 and the two-parallelism probe (scripts/clean_scaling.py) measured
 those seven serial job latencies as the sandbox-scale wall — so
-``CleanConfig(report_mode="silent")`` keeps the stage persists (reuse)
-but skips the counts, collapsing the whole composition into the
-caller's single materializing action.
+``CleanConfig(report_mode="silent")`` skips the counts.  It still cuts
+every stage, and AQE runs each stage's upstream shuffles when its cut
+is created, so silent mode is fewer jobs, not ONE action.
 
 Stage order is cost-ordered on purpose: O(row) key dedups run before
 the shuffle-heavy near-dup family, which runs before the per-line
 explode, so each expensive stage sees the smallest possible corpus.
-Each stage output is persisted through operators/_cache.py:track and
-counted once (the next stage re-reads the persist; recomputing a
-MinHash stage to count it would double the dominant cost).  Callers
-own the cache lifetime: wrap the call in ``cache_scope()`` (or call
-``release_cached()`` after consuming the result) per the repo cache
-convention — releasing inside this function would force the returned
-frame to recompute every stage on its next action.
+
+Every stage boundary is a lineage cut: each stage output is a
+``localCheckpoint`` and, in eager mode, its count is the one job that
+materializes it (the next stage re-reads the cut; recomputing a MinHash
+stage to count it would double the dominant cost).  A persist would
+keep the reuse but not shorten the logical plan: a stage that reads
+``cur`` twice copies the whole composition so far, so the plan grew to
+~4,000 nodes by ``rows_out`` and every action on it (including the
+caller's) paid seconds of driver-side analysis.  With the cuts each
+stage plans only its own operators over a ``LogicalRDD`` leaf.  The
+cuts are not tracked by operators/_cache.py: Spark's ContextCleaner
+reclaims each one once nothing references it, the same lifetime as
+the connected-components rounds (operators/cluster.py), so the
+returned frame never recomputes, even after the caller's
+``cache_scope()`` closes.  That scope still releases the operators'
+own tracked persists (MinHash signatures and band keys); wrap calls
+in it per the repo cache convention.
 """
 
 from __future__ import annotations
@@ -42,8 +52,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from entity_linking_spark.operators._cache import track
 
 
 @dataclass
@@ -58,22 +66,24 @@ class CleanConfig:
     min_tokens: int = 10
     max_tokens: int = 100_000
     redact_pii: bool = True
-    # "eager": persist + count every stage (the attrition report; each
-    # count is one Spark action, so seven serial job latencies — measured
-    # flat across 8→32 cores at sandbox scale, scripts/clean_scaling.py).
-    # "silent": persist stages for reuse (minhash + join-back both read
-    # `cur`) but skip the counts — ONE action total when the caller
-    # materializes the result; report stays empty.  Production shape for
-    # latency-sensitive runs; audits re-run eager on a sample.
+    # "eager": cut + count every stage (the attrition report; each count
+    # is the one Spark job that materializes the stage's localCheckpoint,
+    # so seven serial job latencies — measured flat across 8→32 cores at
+    # sandbox scale, scripts/clean_scaling.py).
+    # "silent": cut every stage the same way (minhash + join-back both
+    # read `cur`) but skip the counts; report stays empty.  Not one
+    # action: AQE still runs each stage's upstream shuffles when its cut
+    # is created.  Production shape for latency-sensitive runs; audits
+    # re-run eager on a sample.
     report_mode: str = "eager"
     extra: dict = field(default_factory=dict)
 
 
 def _counted(df: DataFrame, name: str, report: dict, eager: bool) -> DataFrame:
-    cached = track(df)
+    cut = df.localCheckpoint(eager=False)
     if eager:
-        report[name] = cached.count()
-    return cached
+        report[name] = cut.count()  # the job that materializes the cut
+    return cut
 
 
 def clean_corpus(
@@ -87,7 +97,9 @@ def clean_corpus(
     order, ``rows_in`` first (empty in ``report_mode="silent"``).  A
     document whose every line is
     corpus-frequent boilerplate is dropped at the boilerplate stage
-    (nothing of it remains)."""
+    (nothing of it remains).  A NULL-text document is no duplicate of
+    anything: it survives every dedup stage on its own and is dropped
+    by the token gate (``rows_out``)."""
     from entity_linking_spark.functions.quality import (
         redact_pii as _redact,
         whitespace_token_count,
@@ -139,10 +151,15 @@ def clean_corpus(
         )
         cur = _counted(cur.join(keep, idc, "left_semi"), "url_dedup", report, eager)
 
-    # 2. exact text dedup — md5 window, keep min-id row per text
+    # 2. exact text dedup — md5 window, keep min-id row per text.  NULL
+    # text is no text to match: md5(NULL) would put every NULL-text doc in
+    # one window and keep one, so they bypass this stage and the
+    # boilerplate strip, and the token gate drops each one at rows_out.
+    no_text = F.col(txt).isNull()
     cur = _counted(
-        exact_dedup(cur, idc, txt).drop("dup_count"), "exact_dedup", report,
-        eager,
+        exact_dedup(cur.where(~no_text), idc, txt).drop("dup_count")
+        .unionByName(cur.where(no_text)),
+        "exact_dedup", report, eager,
     )
 
     # 3. MinHash near-dup — pairs → CC → keep component representative
@@ -179,9 +196,12 @@ def clean_corpus(
             ),
         ).alias(txt)
     )
+    # posexplode(split(NULL)) emits no lines, so the inner join would drop
+    # NULL-text docs here; they pass through unchanged instead.
     cur = _counted(
-        cur.drop(txt).join(rebuilt, idc, "inner"), "boilerplate_strip", report,
-        eager,
+        cur.drop(txt).join(rebuilt, idc, "inner")
+        .unionByName(cur.where(no_text)),
+        "boilerplate_strip", report, eager,
     )
 
     # 5. decontamination against the held-out benchmark

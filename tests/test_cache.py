@@ -8,8 +8,13 @@ from pyspark.sql import functions as F
 from entity_linking_spark.operators._cache import cache_scope, release_cached, track
 
 
-def _n_persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted_ids(spark) -> set[int]:
+    """Ids of the session's persisted RDDs.  Tests compare id SETS, never
+    counts: Spark's ContextCleaner may reclaim unreferenced persisted RDDs
+    left by earlier tests (local checkpoints of connected-components
+    rounds and clean_corpus stages) at any moment, which shifts a count
+    baseline but never the ids a scope persisted itself."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def _docs(spark):
@@ -25,47 +30,52 @@ def _emb(spark):
 
 def test_back_to_back_operators_release_all_caches(spark):
     """Two operators run and collect inside one scope; after the scope
-    exits, the session's persisted-RDD set is back to its baseline."""
+    exits, none of the RDDs persisted inside it is still persisted."""
     from entity_linking_spark.operators.ann import lsh_topk
     from entity_linking_spark.operators.dedup import minhash_lsh_pairs
 
-    base = _n_persisted(spark)
+    before = _persisted_ids(spark)
     emb = _emb(spark)
     q = emb.select((F.col("vec_id") + 100).alias("query_id"), "embedding")
     c = emb.select(F.col("vec_id").alias("corpus_id"), "embedding")
     with cache_scope():
         assert len(lsh_topk(q, c, dim=8, k=2).collect()) > 0
         assert minhash_lsh_pairs(_docs(spark), "id", "text", shingle_k=2).count() == 5
-        assert _n_persisted(spark) > base  # the caches actually engaged
-    assert _n_persisted(spark) == base
+        mine = _persisted_ids(spark) - before
+        assert mine  # the caches actually engaged
+    assert not mine & _persisted_ids(spark)
 
 
 def test_nested_scopes_release_only_their_own(spark):
-    base = _n_persisted(spark)
+    before = _persisted_ids(spark)
     df = spark.range(10)
     with cache_scope():
         outer = track(df.select("id"))
         outer.count()
+        outer_ids = _persisted_ids(spark) - before
         with cache_scope():
             inner = track(df.select((F.col("id") * 2).alias("id")))
             inner.count()
-            assert _n_persisted(spark) == base + 2
-        assert _n_persisted(spark) == base + 1  # inner released, outer kept
-    assert _n_persisted(spark) == base
+            inner_ids = _persisted_ids(spark) - before - outer_ids
+            assert len(outer_ids) == 1 and len(inner_ids) == 1
+        now = _persisted_ids(spark)
+        assert outer_ids <= now and not inner_ids & now  # inner released
+    assert not (outer_ids | inner_ids) & _persisted_ids(spark)
 
 
 def test_release_cached_sweeps_everything(spark):
     # earlier test files may have tracked (and never released) operator
     # caches — sweep them first so the baseline is this test's own
     release_cached()
-    base = _n_persisted(spark)
+    before = _persisted_ids(spark)
     t1 = track(spark.range(5))
     t1.count()
     t2 = track(spark.range(7))
     t2.count()
-    assert _n_persisted(spark) == base + 2
+    mine = _persisted_ids(spark) - before
+    assert len(mine) == 2
     assert release_cached() >= 2
-    assert _n_persisted(spark) == base
+    assert not mine & _persisted_ids(spark)
 
 
 def test_concurrent_scopes_are_thread_isolated(spark):
@@ -76,7 +86,8 @@ def test_concurrent_scopes_are_thread_isolated(spark):
     import threading
 
     release_cached()
-    base = _n_persisted(spark)
+    before = _persisted_ids(spark)
+    owned = {}
     a_cached = threading.Event()
     b_done = threading.Event()
     errors = []
@@ -86,12 +97,13 @@ def test_concurrent_scopes_are_thread_isolated(spark):
             with cache_scope():
                 t = track(spark.range(50).select((F.col("id") % 5).alias("k")))
                 t.count()
+                owned["a"] = _persisted_ids(spark) - before
                 a_cached.set()
                 # B's whole scope opens and closes while A is mid-scope
                 assert b_done.wait(30)
                 # A's frame must still be persisted (not swept by B)
                 assert t.storageLevel.useMemory or t.storageLevel.useDisk
-                assert _n_persisted(spark) >= base + 1
+                assert owned["a"] <= _persisted_ids(spark)
         except Exception as e:  # surfaced in the main thread below
             errors.append(e)
             a_cached.set()
@@ -102,6 +114,7 @@ def test_concurrent_scopes_are_thread_isolated(spark):
             with cache_scope():
                 t = track(spark.range(30).select((F.col("id") * 3).alias("v")))
                 t.count()
+                owned["b"] = _persisted_ids(spark) - before - owned["a"]
         except Exception as e:
             errors.append(e)
         finally:
@@ -111,7 +124,8 @@ def test_concurrent_scopes_are_thread_isolated(spark):
     ta.start(); tb.start()
     ta.join(60); tb.join(60)
     assert not errors, errors
-    assert _n_persisted(spark) == base
+    assert owned["a"] and owned["b"]
+    assert not (owned["a"] | owned["b"]) & _persisted_ids(spark)
 
 
 def test_released_plan_still_computes(spark):

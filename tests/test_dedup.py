@@ -228,6 +228,41 @@ def test_parallelize_scan_guard(spark, tmp_path):
     assert _parallelize_scan(rng) is rng
 
 
+def test_parallelize_scan_checkpoint_leaves(spark, tmp_path):
+    """A (local)checkpoint leaves a LogicalRDD with no input files.  One
+    cut from a planned frame keeps its origin plan's size estimate and is
+    widened only when that estimate is under p splits (like a cache); a
+    LogicalRDD of unknown size (createDataFrame rows) is always widened."""
+    from entity_linking_spark.operators.dedup import _parallelize_scan
+
+    p = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "small_corpus")
+    spark.createDataFrame(DOCS, "id string, text string").coalesce(1) \
+        .write.parquet(path)
+    cut = spark.read.parquet(path).coalesce(1).localCheckpoint()
+    assert not cut.inputFiles()
+
+    # small checkpoint of a parquet scan: estimate < p splits → widened
+    widened = _parallelize_scan(cut)
+    assert widened.rdd.getNumPartitions() == p
+    assert sorted(widened.collect()) == sorted(cut.collect())
+
+    # same checkpoint, but every byte is a split: estimate ≥ p → as-is
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        assert _parallelize_scan(cut) is cut
+    finally:
+        spark.conf.set(key, old)
+
+    # createDataFrame rows (and a cut of them) have unknown size: widened
+    local = spark.createDataFrame(DOCS, "id string, text string").coalesce(1)
+    assert _parallelize_scan(local).rdd.getNumPartitions() == p
+    local_cut = local.localCheckpoint()
+    assert _parallelize_scan(local_cut).rdd.getNumPartitions() == p
+
+
 def test_incremental_dedup_against_reference(spark, docs):
     from entity_linking_spark.operators.dedup import (
         incremental_dedup,

@@ -160,19 +160,19 @@ def test_blocking_stages_reused_across_kill_rerun(spark, fixture_dfs, result):
     assert a1 == a2
 
 
-def test_clean_corpus_end_to_end(spark):
-    """Every cleaning stage fires on a planted defect and the attrition
-    report accounts for each drop."""
-    from entity_linking_spark.operators._cache import cache_scope
-    from entity_linking_spark.plans.corpus_clean import CleanConfig, clean_corpus
+BOILER = "accept our cookie banner to continue browsing today"
+BENCH_TEXT = "benchmark answer alpha beta gamma delta epsilon zeta eta theta"
+PLANTED_CFG = dict(line_min_docs=5, near_dup_threshold=0.8, min_tokens=5)
 
-    boiler = "accept our cookie banner to continue browsing today"
+
+def _planted_corpus(spark):
+    """(docs, benchmark) where every cleaning stage has one planted
+    defect to remove."""
 
     def body(i):
         # per-doc disjoint vocabulary so only the PLANTED pair near-dups
         return " ".join(f"d{i}t{j} d{i}w{j} d{i}x{j}" for j in range(8))
 
-    bench_text = "benchmark answer alpha beta gamma delta epsilon zeta eta theta"
     rows = [
         # 1+2: same canonical URL (tracking params differ) + same text
         (1, "http://ex.org/a?utm_source=x", body(1) + " unique one"),
@@ -185,21 +185,27 @@ def test_clean_corpus_end_to_end(spark):
         (6, "http://ex.org/f", body(5) + " near aa bb cc ee"),
         # 7-12: docs carrying the boilerplate line (>= min_docs of them)
         *[(i, f"http://ex.org/p{i}",
-           boiler + "\n" + body(i) + f" page {i} specific words here")
+           BOILER + "\n" + body(i) + f" page {i} specific words here")
           for i in range(7, 13)],
         # 13: contaminated with the benchmark 8-gram
-        (13, "http://ex.org/m", body(13) + " quote " + bench_text),
+        (13, "http://ex.org/m", body(13) + " quote " + BENCH_TEXT),
         # 14: too short after everything
         (14, "http://ex.org/s", "tiny"),
     ]
     docs = spark.createDataFrame(rows, "id long, url string, text string")
-    bench = spark.createDataFrame([(0, bench_text)], "id long, text string")
+    bench = spark.createDataFrame([(0, BENCH_TEXT)], "id long, text string")
+    return docs, bench
+
+
+def test_clean_corpus_end_to_end(spark):
+    """Every cleaning stage fires on a planted defect and the attrition
+    report accounts for each drop."""
+    from entity_linking_spark.operators._cache import cache_scope
+    from entity_linking_spark.plans.corpus_clean import CleanConfig, clean_corpus
+
+    docs, bench = _planted_corpus(spark)
     with cache_scope():
-        out, report = clean_corpus(
-            docs, bench,
-            CleanConfig(line_min_docs=5, near_dup_threshold=0.8,
-                        min_tokens=5),
-        )
+        out, report = clean_corpus(docs, bench, CleanConfig(**PLANTED_CFG))
         got = {r["id"]: r["text"] for r in out.collect()}
     assert report["rows_in"] == 14
     assert report["url_dedup"] == 13          # 2 folded into 1
@@ -210,8 +216,64 @@ def test_clean_corpus_end_to_end(spark):
     assert report["rows_out"] == 9            # 14 too short
     assert set(got) == {1, 3, 5, 7, 8, 9, 10, 11, 12}
     for i in range(7, 13):
-        assert boiler not in got[i]
+        assert BOILER not in got[i]
         assert f"page {i} specific" in got[i]
+
+
+@pytest.mark.parametrize("mode", ["eager", "silent"])
+def test_clean_corpus_result_plan_is_cut(spark, mode):
+    """Every stage boundary is a lineage cut, so the returned frame plans
+    as a checkpoint leaf, not the whole composition.  A persisted stage
+    keeps its full logical plan; without the cuts this plan held
+    thousands of nodes and every action on it paid seconds of analysis."""
+    from entity_linking_spark.operators._cache import cache_scope
+    from entity_linking_spark.plans.corpus_clean import CleanConfig, clean_corpus
+
+    docs, bench = _planted_corpus(spark)
+    with cache_scope():
+        out, _ = clean_corpus(
+            docs, bench, CleanConfig(report_mode=mode, **PLANTED_CFG))
+        qe = out._jdf.queryExecution()
+        for plan in (qe.analyzed(), qe.optimizedPlan()):
+            tree = plan.treeString()
+            assert len(tree.strip().splitlines()) <= 3, tree  # one per node
+            leaves = plan.collectLeaves()
+            assert {
+                leaves.apply(i).nodeName() for i in range(leaves.size())
+            } == {"LogicalRDD"}, tree
+    # the cut result outlives the released scope
+    assert {r["id"] for r in out.collect()} == {1, 3, 5, 7, 8, 9, 10, 11, 12}
+
+
+def test_clean_corpus_null_text_docs_survive_dedup(spark):
+    """NULL text is no duplicate of anything: two NULL-text docs are not
+    folded into one by exact dedup nor lost in the boilerplate strip's
+    line join — each survives every dedup stage and the token gate drops
+    it at rows_out."""
+    from entity_linking_spark.operators._cache import cache_scope
+    from entity_linking_spark.plans.corpus_clean import CleanConfig, clean_corpus
+
+    docs = spark.createDataFrame(
+        [(1, "http://ex.org/n1", None),
+         (2, "http://ex.org/n2", None),
+         (3, "http://ex.org/t3", " ".join(f"c{j}" for j in range(8))),
+         (4, "http://ex.org/t4", " ".join(f"c{j}" for j in range(8))),
+         (5, "http://ex.org/t5", " ".join(f"e{j}" for j in range(8)))],
+        "id long, url string, text string",
+    )
+    with cache_scope():
+        out, report = clean_corpus(
+            docs, None, CleanConfig(min_tokens=3, line_min_docs=5))
+        ids = {r["id"] for r in out.collect()}
+    assert report == {
+        "rows_in": 5,
+        "url_dedup": 5,
+        "exact_dedup": 4,          # only 4 folded into 3; both NULLs kept
+        "near_dedup": 4,
+        "boilerplate_strip": 4,    # NULL-text docs pass the line join
+        "rows_out": 2,             # the token gate drops both NULLs
+    }
+    assert ids == {3, 5}
 
 
 def test_clean_corpus_silent_mode_same_rows(spark):
