@@ -952,7 +952,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Large-star/small-star CC over a deterministic chain graph: edges link
+    """Hybrid connected components over a deterministic chain graph: edges link
     consecutive vec_ids of the same label → one component per label, so the
     oracle is min(vec_id) over label (portable SQL)."""
     from pyspark.sql import Window

@@ -17,11 +17,13 @@ never correctness.  One-shot jobs that exit the JVM after a single query
 need neither.
 
 WHAT IS TRACKED: ``track`` covers ``persist`` — frames an operator reuses
-inside one plan.  It does NOT cover lineage cuts: the ``localCheckpoint``
-rounds of ``connected_components`` and the stage outputs of
-``clean_corpus`` are checkpointed RDDs that Spark's ContextCleaner
-unpersists once nothing references them.  A scope never releases them,
-and a frame built on a cut keeps its data after the scope closes (a
+inside one plan.  It does NOT cover lineage cuts: the input cut and
+the distributed rounds of ``connected_components`` and the stage outputs
+of ``clean_corpus`` are ``localCheckpoint`` RDDs that Spark's
+ContextCleaner unpersists once nothing references them (a small graph's
+CC result is a driver-built Arrow relation, holding nothing at all).  A
+scope never releases them, and a frame built on a cut keeps its data
+after the scope closes (a
 persist does not shorten the logical plan; a cut does, which is why a
 multi-stage composition cuts instead of persisting).
 
