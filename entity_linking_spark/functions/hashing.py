@@ -327,10 +327,3 @@ def rolling_fingerprint(col: Column | str, base: int = 31, mod: int = (1 << 31) 
         F.lit(0).cast("long"),
         lambda acc, ch: F.pmod(acc * base + F.ascii(ch), F.lit(mod)),
     )
-
-
-def salted_key(key: Column | str, id_col: Column | str, num_salts: int) -> Column:
-    """key → 'key#s' with s = pmod(xxhash64(id), num_salts) — explicit hot-key
-    salting (north rule).  The other join side must explode all num_salts
-    variants; see operators/blocking.py."""
-    return F.concat_ws("#", _c(key), F.pmod(F.xxhash64(_c(id_col)), F.lit(num_salts)).cast("string"))

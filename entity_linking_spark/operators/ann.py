@@ -44,6 +44,7 @@ from entity_linking_spark.functions.vector import (
     cosine_packed_udf,
     pack_f32_udf,
 )
+from entity_linking_spark.operators.keyjoin import guarded_key_join
 from entity_linking_spark.operators.topk import top_k_per_group
 
 
@@ -118,14 +119,13 @@ def _pack_side(df: DataFrame, id_col: str, out_id: str, out_emb: str) -> DataFra
 
 
 def _lsh_candidates(
-    qp: DataFrame,
     cp: DataFrame,
     bucket_udf,
-    exclude_self: bool,
+    qp: DataFrame | None = None,
+    exclude_self: bool = True,
     max_bucket: int | None = 100_000,
     multi_probe: bool = False,
     num_planes: int | None = None,
-    self_join: bool = False,
 ) -> DataFrame:
     """Distinct (query_id, corpus_id) candidates from the bucket equi-join.
 
@@ -140,50 +140,36 @@ def _lsh_candidates(
 
     Bucket-size guard (VERDICT r04 #3/#4): a degenerate corpus (many
     near-identical embeddings collapsing into one bucket) would make the
-    bucket join quadratic.  Buckets where EITHER side exceeds
-    ``max_bucket`` are dropped via the INVERTED shape: the over-cap
-    bucket set — tiny by pigeonhole, ≤ |keys| / max_bucket rows — is
-    broadcast and both key streams anti-join against it; the under-cap
-    complement (corpus-proportional) is never broadcast.  Identical
-    embeddings that common are an exact-dedup problem, not an ANN one.
-    ``max_bucket=None`` disables the guard (and its two aggregations).
+    bucket join quadratic, so buckets where EITHER side exceeds
+    ``max_bucket`` are dropped by ``guarded_key_join``'s inverted
+    over-cap guard.  Identical embeddings that common are an exact-dedup
+    problem, not an ANN one.  ``max_bucket=None`` disables the guard.
 
-    ``multi_probe=True`` (requires ``num_planes``): each QUERY also
-    probes the ``num_planes`` Hamming-distance-1 buckets of every table
-    (bucket id XOR each single bit) — (1+num_planes)× query-side keys
-    for a recall boost comparable to adding num_planes tables, without
-    re-bucketing the corpus (the standard multi-probe LSH trade).
+    ``qp=None`` (embedding_dedup_pairs) self-joins the corpus: it is
+    bucketed, cached and size-aggregated ONCE, and only pairs with
+    query_id < corpus_id are returned.
 
-    ``self_join=True`` (embedding_dedup_pairs): qp and cp are the same
-    corpus under different column names, so the corpus stream is
-    bucketed, cached, and size-aggregated ONCE and the query side is a
-    rename of it — without the flag the guard would run the bucket UDF,
-    the cache, and the over-cap aggregation twice on identical data
-    (and the two over-cap sets it unioned would be equal)."""
-    from entity_linking_spark.operators._cache import track
-
+    ``multi_probe=True`` (requires ``qp`` and ``num_planes``): each QUERY
+    also probes the ``num_planes`` Hamming-distance-1 buckets of every
+    table (bucket id XOR each single bit) — (1+num_planes)× query-side
+    keys for a recall boost comparable to adding num_planes tables,
+    without re-bucketing the corpus (the standard multi-probe LSH
+    trade)."""
+    if multi_probe and (qp is None or num_planes is None):
+        raise ValueError("multi_probe requires qp and num_planes")
     bkey = F.xxhash64(F.col("table"), F.col("bucket")).alias("bkey")
     ck = cp.select(
-        "corpus_id", F.posexplode(bucket_udf(F.col("c_pemb"))).alias("table", "bucket")
-    ).select("corpus_id", bkey)
-    if self_join and not multi_probe:
-        if max_bucket is not None:
-            ck = track(ck)
-            ck.count()  # eager: consumed by the over-cap agg + both sides
-            over = F.broadcast(
-                ck.groupBy("bkey").agg(F.count("*").alias("n"))
-                .where(F.col("n") > max_bucket).select("bkey")
-            )
-            ck = ck.join(over, "bkey", "left_anti")
-        qk = ck.select(F.col("corpus_id").alias("query_id"), "bkey")
+        F.col("corpus_id").alias("id"),
+        F.posexplode(bucket_udf(F.col("c_pemb"))).alias("table", "bucket"),
+    ).select("id", bkey)
+    if qp is None:
+        pairs = guarded_key_join(ck, max_bucket=max_bucket, key="bkey")
     else:
         q_exploded = qp.select(
-            "query_id",
+            F.col("query_id").alias("id"),
             F.posexplode(bucket_udf(F.col("q_pemb"))).alias("table", "bucket"),
         )
         if multi_probe:
-            if num_planes is None:
-                raise ValueError("multi_probe requires num_planes")
             probes = F.array(
                 F.col("bucket"),
                 *[
@@ -192,26 +178,13 @@ def _lsh_candidates(
                 ],
             )
             q_exploded = q_exploded.select(
-                "query_id", "table", F.explode(probes).alias("bucket")
+                "id", "table", F.explode(probes).alias("bucket")
             )
-        qk = q_exploded.select("query_id", bkey)
-        if max_bucket is not None:
-            qk = track(qk)
-            ck = track(ck)
-            qk.count()  # eager: consumed by the over-cap agg + the join side
-            ck.count()  # (racing branches would recompute the bucket UDF)
-            over = F.broadcast(
-                qk.groupBy("bkey").agg(F.count("*").alias("n"))
-                .where(F.col("n") > max_bucket).select("bkey")
-                .unionByName(
-                    ck.groupBy("bkey").agg(F.count("*").alias("n"))
-                    .where(F.col("n") > max_bucket).select("bkey")
-                )
-                .distinct()
-            )
-            qk = qk.join(over, "bkey", "left_anti")
-            ck = ck.join(over, "bkey", "left_anti")
-    cand = qk.join(ck, "bkey").select("query_id", "corpus_id")
+        qk = q_exploded.select("id", bkey)
+        pairs = guarded_key_join(qk, ck, max_bucket=max_bucket, key="bkey")
+    cand = pairs.select(
+        F.col("id_a").alias("query_id"), F.col("id_b").alias("corpus_id")
+    )
     if exclude_self:
         cand = cand.where(F.col("query_id") != F.col("corpus_id"))
     return cand.dropDuplicates(["query_id", "corpus_id"])
@@ -266,7 +239,7 @@ def lsh_topk(
     qp = _pack_side(queries, query_id, "query_id", "q_pemb")
     cp = _pack_side(corpus, corpus_id, "corpus_id", "c_pemb")
     cand = _lsh_candidates(
-        qp, cp, bucket_udf, exclude_self,
+        cp, bucket_udf, qp, exclude_self,
         max_bucket=max_bucket, multi_probe=multi_probe, num_planes=num_planes,
     )
     scored = _score_candidates(cand, qp, cp)
@@ -439,10 +412,7 @@ def embedding_dedup_pairs(
     cp = qp.select(
         F.col("query_id").alias("corpus_id"), F.col("q_pemb").alias("c_pemb")
     )
-    cand = _lsh_candidates(
-        qp, cp, bucket_udf, exclude_self=True, max_bucket=max_bucket,
-        self_join=True,
-    ).where(F.col("query_id") < F.col("corpus_id"))
+    cand = _lsh_candidates(cp, bucket_udf, max_bucket=max_bucket)
     scored = _score_candidates(cand, qp, cp)
     return scored.where(F.col("cosine") >= threshold).select(
         F.col("query_id").alias("id_a"),

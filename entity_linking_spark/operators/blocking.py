@@ -43,6 +43,9 @@ from entity_linking_spark.functions.hashing import (
 from entity_linking_spark.functions.text import normalize_text
 from entity_linking_spark.operators._cache import track
 
+# Catalog stage that holds (key, m_freq, e_freq) in catalog mode.
+KEY_STATS_STAGE = "blocking_key_stats"
+
 
 @dataclass(frozen=True)
 class BlockingConfig:
@@ -132,7 +135,6 @@ def candidate_pairs(
     entity_keys: DataFrame,
     conf: BlockingConfig = BlockingConfig(),
     catalog=None,
-    key_stats_stage: str = "blocking_key_stats",
     resume: bool = True,
 ) -> DataFrame:
     """Equi-join the two key streams → distinct (mention_id, entity_id).
@@ -146,31 +148,32 @@ def candidate_pairs(
     semi/anti hot/cold split.  The under-cap key population — which is
     corpus-proportional — is never broadcast and never stops streaming.
 
-    Hot-key classification has two modes (VERDICT r03 #9):
+    The stop-key rule is asymmetric on purpose, which is why blocking
+    keeps its own guard instead of ``operators/keyjoin.py``'s: a key
+    with many MENTIONS but few entities is still joined (salted), since
+    every mention of a common name needs its candidates, while a key
+    shared by too many ENTITIES identifies none of them.
 
-    - ``catalog=None`` (default, one-shot jobs): the hot set — keys over
-      ``hot_threshold``, tiny by construction — is collected (bounded at
-      100k rows) so the plan SHAPE adapts: with no hot keys the salted
-      branches and their four semi/anti joins are dropped from the plan
-      instead of executing empty.
-    - ``catalog=`` a sources.catalog.Catalog: the SCALE.md stage-table
-      shape — key_stats (key, m_freq, e_freq) is written once as a
-      resumable catalog stage and the hot/cold classification happens
-      via broadcast joins against it, with NO driver collect (no
-      LocalTableScan in the plan; asserted by scripts/explain_audit.py).
-      All branches stay in the plan (empty ones cost four broadcast
-      semi/anti probes); reruns reuse the stage (``resume=True``), so
-      the two frequency aggregations are paid once per corpus version.
+    Hot-key classification is fully distributed: key_stats (key, m_freq,
+    e_freq) is joined by broadcast against the streams, never collected
+    to the driver (no LocalTableScan in the plan; asserted by
+    scripts/explain_audit.py).  All branches stay in the plan; an empty
+    salted branch costs two broadcast semi-join probes.
 
-    Catalog-mode callers pass stage reads (``link_entities`` checkpoints
-    both key streams with ``Catalog.get_or_compute``), so the streams are
-    parquet scans and nothing is cached here.  In collect mode both key
-    streams are persisted (via the tracked-cache registry,
-    operators/_cache.py — release with ``cache_scope``/``release_cached``
-    once the pair table is materialized): the plan consumes each 3-5
-    times (frequency agg, hot/cold split, joins), and the MinHash
-    signature expressions feeding them are expensive to recompute
-    (measured ~10× end-to-end speedup at bench scale).
+    - ``catalog=`` a sources.catalog.Catalog: key_stats is written once
+      as the resumable ``KEY_STATS_STAGE`` catalog stage, and reruns
+      reuse it (``resume=True``), so the two frequency aggregations are
+      paid once per corpus version.  Callers pass stage reads
+      (``link_entities`` checkpoints both key streams with
+      ``Catalog.get_or_compute``), so the streams are parquet scans and
+      nothing is cached here.
+    - ``catalog=None``: key_stats is computed inline, and both in-memory
+      key streams are persisted (via the tracked-cache registry,
+      operators/_cache.py — release with ``cache_scope``/``release_cached``
+      once the pair table is materialized): the plan consumes each
+      several times (frequency agg, hot/cold split, joins), and the
+      MinHash signature expressions feeding them are expensive to
+      recompute (measured ~10× end-to-end speedup at bench scale).
     """
 
     def _key_stats() -> DataFrame:
@@ -182,6 +185,37 @@ def candidate_pairs(
             F.coalesce("e_freq", F.lit(0)).alias("e_freq"),
         )
 
+    if catalog is not None:
+        stats = catalog.get_or_compute(KEY_STATS_STAGE, _key_stats, resume=resume)
+    else:
+        mention_keys = track(mention_keys)
+        entity_keys = track(entity_keys)
+        # Eager materialization: the plan consumes each stream from
+        # several concurrent branches (broadcast subqueries + hot/cold
+        # splits); populating the cache first keeps racing branches from
+        # recomputing the expensive MinHash key expressions (measured ~5×
+        # end-to-end difference at bench scale).
+        mention_keys.count()
+        entity_keys.count()
+        stats = _key_stats()
+
+    m = mention_keys.withColumnRenamed("id", "mention_id")
+    e = entity_keys.withColumnRenamed("id", "entity_id")
+    # INVERTED stop-key guard (VERDICT r04 #1): broadcast only the tiny
+    # exceptional set — keys whose entity-side frequency exceeds
+    # max_key_freq (≤ |entity keys| / max_key_freq rows by pigeonhole) —
+    # and anti-join both streams against it; the r04 shape broadcast the
+    # UNDER-cap complement (every distinct entity-side key,
+    # O(entities × keys/record) — a forced multi-GB broadcast at 10^8+
+    # entities).  No existence filter either: the inner join on key
+    # already intersects the streams.
+    if conf.max_key_freq is not None:
+        stop_keys = F.broadcast(
+            stats.where(F.col("e_freq") > conf.max_key_freq).select("key")
+        )
+        m = m.join(stop_keys, "key", "left_anti")
+        e = e.join(stop_keys, "key", "left_anti")
+
     # Hot = EITHER side's key frequency over threshold (a key with few
     # mentions but many entities is just as skewed as the reverse — the
     # r01 mention-side-only trigger missed the entity-heavy shape, ADVICE
@@ -191,143 +225,45 @@ def candidate_pairs(
     is_hot = (F.col("m_freq") > conf.hot_threshold) | (
         F.col("e_freq") > conf.hot_threshold
     )
-    salt_mentions = (F.col("m_freq") >= F.col("e_freq")).alias("salt_mentions")
-
-    def _assemble(m, e, cold_pairs_or_all, m_hot_b, e_hot_b):
-        """Union cold + salted branches → distinct pair table.  The hot
-        frames are broadcast key sets (None = branch statically absent)."""
-
-        def salted_branch(hot_b, pick_side, pick_id, explode_side):
-            """Explicit salting: the heavy side picks one salt from its
-            id, the light side explodes all num_salts variants.  The
-            salted sub-key is xxhash64(key, salt) — one long regardless
-            of the key type, so the hot branch never widens shuffle
-            rows."""
-            picked = pick_side.join(hot_b, "key", "left_semi").withColumn(
-                "skey",
-                F.xxhash64(
-                    F.col("key"),
-                    F.pmod(
-                        F.xxhash64(F.col(pick_id)), F.lit(conf.num_salts)
-                    ).cast("int"),
-                ),
-            )
-            exploded = (
-                explode_side.join(hot_b, "key", "left_semi")
-                .withColumn(
-                    "s",
-                    F.explode(F.sequence(F.lit(0), F.lit(conf.num_salts - 1))),
-                )
-                .withColumn("skey", F.xxhash64(F.col("key"), F.col("s").cast("int")))
-                .drop("key", "s")
-            )
-            return picked.join(exploded, "skey").select(
-                "mention_id", "entity_id", "key"
-            )
-
-        branches = [cold_pairs_or_all]
-        if m_hot_b is not None:
-            branches.append(salted_branch(m_hot_b, m, "mention_id", e))
-        if e_hot_b is not None:
-            branches.append(salted_branch(e_hot_b, e, "entity_id", m))
-        pairs = branches[0]
-        for b in branches[1:]:
-            pairs = pairs.unionByName(b)
-        return pairs.groupBy("mention_id", "entity_id").agg(
-            F.min("key").alias("blocking_key")
-        )
-
-    if catalog is not None:
-        # Stage-table mode: classification fully distributed, no collect.
-        # INVERTED stop-key guard (VERDICT r04 #1): broadcast only the
-        # tiny exceptional set — keys whose entity-side frequency exceeds
-        # max_key_freq (≤ |entity keys| / max_key_freq rows by pigeonhole)
-        # — and anti-join both streams against it; the r04 shape
-        # broadcast the UNDER-cap complement (every distinct entity-side
-        # key, O(entities × keys/record) — a forced multi-GB broadcast at
-        # 10^8+ entities).  The old `e_freq >= 1` existence filter is
-        # dropped outright: the downstream inner join on key already
-        # intersects the streams, so pre-filtering mention keys against
-        # the entity key set bought nothing but the broadcast.
-        stats = catalog.get_or_compute(key_stats_stage, _key_stats, resume=resume)
-        m = mention_keys.withColumnRenamed("id", "mention_id")
-        e = entity_keys.withColumnRenamed("id", "entity_id")
-        if conf.max_key_freq is not None:
-            stop_keys = F.broadcast(
-                stats.where(F.col("e_freq") > conf.max_key_freq).select("key")
-            )
-            m = m.join(stop_keys, "key", "left_anti")
-            e = e.join(stop_keys, "key", "left_anti")
-        hot = stats.where(is_hot).select("key", salt_mentions)
-        all_hot = F.broadcast(hot.select("key"))
-        m_cold = m.join(all_hot, "key", "left_anti")
-        e_cold = e.join(all_hot, "key", "left_anti")
-        cold_pairs = m_cold.join(e_cold, "key").select(
-            "mention_id", "entity_id", "key"
-        )
-        m_hot_b = F.broadcast(hot.where(F.col("salt_mentions")).select("key"))
-        e_hot_b = F.broadcast(hot.where(~F.col("salt_mentions")).select("key"))
-        return _assemble(m, e, cold_pairs, m_hot_b, e_hot_b)
-
-    # Collect mode — same inverted stop-key guard as stage mode: only the
-    # tiny over-cap set is broadcast (anti-join); no under-cap /
-    # existence broadcast (VERDICT r04 #1).
-    mention_keys = track(mention_keys)
-    entity_keys = track(entity_keys)
-    # Eager materialization: the downstream plan consumes each stream from
-    # several concurrent branches (broadcast subqueries + hot/cold splits);
-    # populating the cache first prevents racing branches from redundantly
-    # recomputing the expensive MinHash key expressions (measured ~5×
-    # end-to-end difference at bench scale).
-    mention_keys.count()
-    entity_keys.count()
-    hot_df = _key_stats().where(is_hot).select("key", salt_mentions)
-
-    m = mention_keys.withColumnRenamed("id", "mention_id")
-    e = entity_keys.withColumnRenamed("id", "entity_id")
-    if conf.max_key_freq is not None:
-        stop_keys = F.broadcast(
-            entity_keys.groupBy("key")
-            .agg(F.count("*").alias("e_freq"))
-            .where(F.col("e_freq") > conf.max_key_freq)
-            .select("key")
-        )
-        m = m.join(stop_keys, "key", "left_anti")
-        e = e.join(stop_keys, "key", "left_anti")
-
-    # The hot set is tiny by construction (keys over hot_threshold) — decide
-    # the plan shape from it directly: with no hot keys (the common case on
-    # well-distributed inputs) the whole salted branch and its four
-    # semi/anti joins are dropped from the plan instead of executing empty.
-    hot_rows = hot_df.limit(100_000).collect()
-    if not hot_rows:
-        pairs = m.join(e, "key").select("mention_id", "entity_id", "key")
-        return pairs.groupBy("mention_id", "entity_id").agg(
-            F.min("key").alias("blocking_key")
-        )
-
-    spark = mention_keys.sparkSession
-    key_type = dict(mention_keys.dtypes).get("key", "string")
-    key_schema = f"key {key_type}"
-    m_heavy = [r["key"] for r in hot_rows if r["salt_mentions"]]
-    e_heavy = [r["key"] for r in hot_rows if not r["salt_mentions"]]
-    all_hot = F.broadcast(
-        spark.createDataFrame([(k,) for k in m_heavy + e_heavy], key_schema)
+    hot = stats.where(is_hot).select(
+        "key", (F.col("m_freq") >= F.col("e_freq")).alias("salt_mentions")
     )
+    all_hot = F.broadcast(hot.select("key"))
     m_cold = m.join(all_hot, "key", "left_anti")
     e_cold = e.join(all_hot, "key", "left_anti")
     cold_pairs = m_cold.join(e_cold, "key").select("mention_id", "entity_id", "key")
-    m_hot_b = (
-        F.broadcast(spark.createDataFrame([(k,) for k in m_heavy], key_schema))
-        if m_heavy
-        else None
+
+    def salted_branch(hot_b, pick_side, pick_id, explode_side):
+        """Explicit salting: the heavy side picks one salt from its id,
+        the light side explodes all num_salts variants.  The salted
+        sub-key is xxhash64(key, salt) — one long regardless of the key
+        type, so the hot branch never widens shuffle rows."""
+        picked = pick_side.join(hot_b, "key", "left_semi").withColumn(
+            "skey",
+            F.xxhash64(
+                F.col("key"),
+                F.pmod(F.xxhash64(F.col(pick_id)), F.lit(conf.num_salts)).cast("int"),
+            ),
+        )
+        exploded = (
+            explode_side.join(hot_b, "key", "left_semi")
+            .withColumn(
+                "s", F.explode(F.sequence(F.lit(0), F.lit(conf.num_salts - 1)))
+            )
+            .withColumn("skey", F.xxhash64(F.col("key"), F.col("s").cast("int")))
+            .drop("key", "s")
+        )
+        return picked.join(exploded, "skey").select("mention_id", "entity_id", "key")
+
+    m_hot_b = F.broadcast(hot.where(F.col("salt_mentions")).select("key"))
+    e_hot_b = F.broadcast(hot.where(~F.col("salt_mentions")).select("key"))
+    pairs = (
+        cold_pairs.unionByName(salted_branch(m_hot_b, m, "mention_id", e))
+        .unionByName(salted_branch(e_hot_b, e, "entity_id", m))
     )
-    e_hot_b = (
-        F.broadcast(spark.createDataFrame([(k,) for k in e_heavy], key_schema))
-        if e_heavy
-        else None
+    return pairs.groupBy("mention_id", "entity_id").agg(
+        F.min("key").alias("blocking_key")
     )
-    return _assemble(m, e, cold_pairs, m_hot_b, e_hot_b)
 
 
 def exhaustive_pairs(mentions: DataFrame, entities: DataFrame,

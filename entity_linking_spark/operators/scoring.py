@@ -328,11 +328,3 @@ def score_pairs_broadcast(
     return score_indexed_pairs(with_surf, ba, bb, conf).drop(
         "surf_a", "surf_b", "idx_a", "idx_b"
     )
-
-
-def match_edges(scored: DataFrame, src: str, dst: str,
-                conf: ScoringConfig = ScoringConfig()) -> DataFrame:
-    """Thresholded match edges for the clustering stage."""
-    return scored.where(F.col("score") >= conf.threshold).select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    )

@@ -72,32 +72,3 @@ def pairwise_f1_from_contingency(
     p = tp / pp if pp else 1.0
     r = tp / ap if ap else 1.0
     return PairwiseMetrics(p, r, _f1(p, r), tp, pp, ap)
-
-
-def build_labeled_pairs(
-    mentions: DataFrame,  # (mention_id, entity_id, blocking_key)
-    key_col: str = "blocking_key",
-) -> DataFrame:
-    """FIXTURES.md §4: all mention pairs sharing a blocking key; positives
-    share entity_id.  Quadratic per key — evaluation-scale only."""
-    a = mentions.select(
-        F.col(key_col).alias("k"),
-        F.col("mention_id").alias("mention_id_a"),
-        F.col("entity_id").alias("entity_a"),
-    )
-    b = mentions.select(
-        F.col(key_col).alias("k"),
-        F.col("mention_id").alias("mention_id_b"),
-        F.col("entity_id").alias("entity_b"),
-    )
-    return (
-        a.join(b, "k")
-        .where(F.col("mention_id_a") < F.col("mention_id_b"))
-        .select(
-            "mention_id_a",
-            "mention_id_b",
-            F.col("k").alias("blocking_key"),
-            (F.col("entity_a") == F.col("entity_b")).alias("is_match"),
-        )
-        .dropDuplicates(["mention_id_a", "mention_id_b"])
-    )

@@ -61,13 +61,6 @@ class PipelineConfig:
     # plan (id pairs + matrix broadcasts — no shuffle of embedding-laden
     # rows); above it, the join-attached fused-UDF plan (web scale).
     broadcast_feature_rows: int = 500_000
-    # Catalog-backed blocking (VERDICT r04 stretch #8): the exploded key
-    # streams land as stages and candidate_pairs runs in stage-table
-    # hot-key mode (key_stats stage, zero driver collect) — a killed run
-    # resumes blocking from the checkpointed keys/stats instead of
-    # recomputing the MinHash key expressions over the corpus.  False
-    # restores the one-shot in-memory mode.
-    stage_table_blocking: bool = True
 
 
 def prepare_mentions(pages: DataFrame, mentions: DataFrame, context_size: int) -> DataFrame:
@@ -134,31 +127,22 @@ def link_entities(
     )
 
     def compute_candidates() -> DataFrame:
-        if cfg.stage_table_blocking:
-            # full catalog-backed blocking: key streams + key_stats are
-            # resumable stages, classification is distributed (no driver
-            # collect) — a rerun after a mid-blocking kill reuses every
-            # complete stage and re-scans nothing
-            mk = cat.get_or_compute(
-                "mention_blocking_keys",
-                lambda: blocking_keys(
-                    m_prep, "mention_id", "norm_surface", cfg.blocking
-                ),
-                resume,
-            )
-            ek = cat.get_or_compute(
-                "entity_blocking_keys",
-                lambda: blocking_keys(
-                    e_prep, "entity_id", "norm_title", cfg.blocking
-                ),
-                resume,
-            )
-            return candidate_pairs(
-                mk, ek, cfg.blocking, catalog=cat, resume=resume
-            )
-        mk = blocking_keys(m_prep, "mention_id", "norm_surface", cfg.blocking)
-        ek = blocking_keys(e_prep, "entity_id", "norm_title", cfg.blocking)
-        return candidate_pairs(mk, ek, cfg.blocking)
+        # catalog-backed blocking (VERDICT r04 stretch #8): the key
+        # streams and key_stats are resumable stages and classification
+        # is distributed (no driver collect) — a rerun after a
+        # mid-blocking kill reuses every complete stage and re-scans
+        # nothing
+        mk = cat.get_or_compute(
+            "mention_blocking_keys",
+            lambda: blocking_keys(m_prep, "mention_id", "norm_surface", cfg.blocking),
+            resume,
+        )
+        ek = cat.get_or_compute(
+            "entity_blocking_keys",
+            lambda: blocking_keys(e_prep, "entity_id", "norm_title", cfg.blocking),
+            resume,
+        )
+        return candidate_pairs(mk, ek, cfg.blocking, catalog=cat, resume=resume)
 
     cands = cat.get_or_compute("candidates", compute_candidates, resume)
 

@@ -260,6 +260,13 @@ def main() -> int:
         catalog=cat,
     )
     stage_plan = p_stage._jdf.queryExecution().executedPlan().toString()
+    # the same classification without a catalog: key_stats aggregated
+    # inline over the tracked in-memory streams
+    inline_plan = candidate_pairs(
+        blocking_keys(m, "mention_id", "s", conf),
+        blocking_keys(e, "entity_id", "s", conf),
+        conf,
+    )._jdf.queryExecution().executedPlan().toString()
     # blocking_keys projects norm/grams/sig once per row (CLAUDE.md rule
     # 6): one MinHash aggregate and one normalize regexp per plan, in
     # both key encodings
@@ -287,6 +294,10 @@ def main() -> int:
          and re.search(r"e_freq#\d+L? > 20", stage_plan) is not None
          and re.search(r"e_freq#\d+L? <= \d", stage_plan) is None
          and re.search(r"e_freq#\d+L? >= 1\b", stage_plan) is None),
+        ("no-catalog hot-key classification is distributed too: no "
+         "driver-collected key list anywhere (no LocalTableScan / "
+         "ExistingRDD[key)",
+         "LocalTableScan" not in inline_plan and "ExistingRDD[key" not in inline_plan),
     ]:
         mark = "x" if ok else " "
         lines.append(f"- [{mark}] {desc}")

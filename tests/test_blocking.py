@@ -155,10 +155,10 @@ def test_compact_keys_same_pair_set(spark, fixture_dfs):
 
 def test_stage_table_hot_key_mode_pair_parity(spark, tmp_path):
     """catalog-backed hot-key classification (VERDICT r03 #9): the pair
-    set must equal the collect-mode one on a mixed-skew input (both
+    set must equal the no-catalog one on a mixed-skew input (both
     salted branches live), the key_stats stage must be reused on rerun
-    (snapshot unchanged), and the plan must contain NO LocalTableScan
-    (the collect-mode signature of driver-collected hot keys)."""
+    (snapshot unchanged), and neither plan may contain a LocalTableScan
+    (the signature of driver-collected hot keys)."""
     from entity_linking_spark.sources.catalog import Catalog
 
     m = spark.createDataFrame(
@@ -177,24 +177,22 @@ def test_stage_table_hot_key_mode_pair_parity(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path / "stages"))
 
     p_stage = candidate_pairs(mk, ek, conf, catalog=cat)
-    p_collect = candidate_pairs(mk, ek, conf)
+    p_inline = candidate_pairs(mk, ek, conf)
     a = p_stage.select("mention_id", "entity_id")
-    b = p_collect.select("mention_id", "entity_id")
+    b = p_inline.select("mention_id", "entity_id")
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     assert a.count() == 30 * 2 + 2 * 30
 
-    # no driver-collected hot keys in the stage-mode plan: collected key
-    # lists re-enter the plan as driver-local relations (LocalTableScan /
-    # Scan ExistingRDD[key...]); stage mode reads them from the parquet
-    # stage instead
-    plan = p_stage._jdf.queryExecution().executedPlan().toString()
+    # no driver-collected hot keys in either plan: collected key lists
+    # re-enter a plan as driver-local relations (LocalTableScan / Scan
+    # ExistingRDD[key...]); the stage mode reads key_stats from the
+    # parquet stage, the no-catalog mode aggregates it inline
+    plan = _executed_plan(p_stage)
     assert "LocalTableScan" not in plan and "ExistingRDD[key" not in plan
     assert "blocking_key_stats" in plan or "Parquet" in plan
-    # the collect-mode plan DOES carry the driver-local key lists
-    # (sanity: the assertion above distinguishes the modes)
-    collect_plan = p_collect._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in collect_plan or "ExistingRDD[key" in collect_plan
+    inline_plan = _executed_plan(p_inline)
+    assert "LocalTableScan" not in inline_plan and "ExistingRDD[key" not in inline_plan
 
     # rerun reuses the stage: snapshot unchanged
     snap = cat.snapshot_id("blocking_key_stats")
@@ -217,6 +215,36 @@ def test_stop_key_cap_drops_hot_keys(spark):
         bk(m, "mention_id", "s", conf), bk(e, "entity_id", "s", conf), conf
     )
     assert pairs.count() == 0  # every key exceeds the stop-key cap
+
+
+def test_stop_key_rule_reads_entity_side_only(spark, tmp_path):
+    """The stop-key cap is asymmetric: only the ENTITY-side frequency
+    makes a stop key.  A key with more than ``max_key_freq`` mentions but
+    few entities is still joined — and, being over ``hot_threshold``, it
+    is classified hot, so its pairs come from the salted branch (the cold
+    branch anti-joins every hot key away)."""
+    from entity_linking_spark.sources.catalog import Catalog
+
+    m = spark.createDataFrame(
+        [(f"m{i}", "aaaa bbbb") for i in range(30)], "mention_id string, s string"
+    )
+    e = spark.createDataFrame(
+        [(f"e{i}", "aaaa bbbb") for i in range(2)], "entity_id string, s string"
+    )
+    conf = BlockingConfig(hot_threshold=10, num_salts=4, max_key_freq=10)
+    mk = blocking_keys(m, "mention_id", "s", conf)
+    ek = blocking_keys(e, "entity_id", "s", conf)
+    cat = Catalog(spark, str(tmp_path / "stages"))
+    expect = {(f"m{i}", f"e{j}") for i in range(30) for j in range(2)}
+    for c in (cat, None):
+        got = candidate_pairs(mk, ek, conf, catalog=c).collect()
+        assert {(r["mention_id"], r["entity_id"]) for r in got} == expect
+
+    stats = cat.read("blocking_key_stats").collect()
+    assert stats and all(
+        r["m_freq"] == 30 > conf.max_key_freq >= r["e_freq"] == 2 for r in stats
+    )
+    assert all(r["m_freq"] > conf.hot_threshold for r in stats)  # all hot
 
 
 def _executed_plan(df) -> str:
@@ -268,8 +296,8 @@ def test_blocking_keys_match_golden_digest(spark, compact):
 def test_catalog_mode_caches_nothing(spark, tmp_path):
     """Catalog-mode callers pass stage reads (parquet scans), so
     candidate_pairs must not persist them: the tracked-cache registry is
-    unchanged and the plan has no InMemoryRelation.  Collect mode still
-    tracks (and caches) both streams."""
+    unchanged and the plan has no InMemoryRelation.  Without a catalog
+    it tracks (and caches) both in-memory streams."""
     from entity_linking_spark.operators._cache import _tracked, cache_scope
     from entity_linking_spark.sources.catalog import Catalog
 
@@ -294,10 +322,10 @@ def test_catalog_mode_caches_nothing(spark, tmp_path):
     assert "InMemoryRelation" not in _executed_plan(p_stage)
 
     with cache_scope():
-        p_collect = candidate_pairs(mk, ek, conf)
+        p_inline = candidate_pairs(mk, ek, conf)
         assert len(_tracked()) == n_tracked + 2
-        assert "InMemoryRelation" in _executed_plan(p_collect)
+        assert "InMemoryRelation" in _executed_plan(p_inline)
         a = p_stage.select("mention_id", "entity_id")
-        b = p_collect.select("mention_id", "entity_id")
+        b = p_inline.select("mention_id", "entity_id")
         assert a.count() == 36
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
