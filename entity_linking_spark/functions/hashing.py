@@ -178,11 +178,11 @@ def lsh_band_keys(
     identical — the standard banding amplification of MinHash Jaccard.
 
     ``compact=False``: human-readable strings 'b{i}:{hash(band slice)}'
-    (the F1-at-shared-key evaluation and stage schemas keep string keys,
-    BlockingConfig.compact_keys).  ``compact=True``: array<bigint> —
+    (blocking: the F1-at-shared-key evaluation and stage schemas keep
+    string keys).  ``compact=True``: array<bigint> —
     (band idx, band slice) folded into ONE xxhash64 long, so the bucket
     exchange ships two fixed-width longs per row instead of a ~25-byte
-    string (the compact_keys / ann.py:136 lesson; VERDICT r03 #2).  A
+    string (the ann.py:136 lesson; VERDICT r03 #2).  A
     64-bit collision across band indexes merely adds a candidate pair
     that downstream verification rejects — zero recall cost.
     """

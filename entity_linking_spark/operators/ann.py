@@ -133,8 +133,7 @@ def _lsh_candidates(
     behind in qp/cp and are re-attached after candidate dedup.  The
     (table, bucket) pair is folded to ONE xxhash64 long, so the exchange
     ships two fixed-width longs per row instead of an 8-20 B string key
-    (the same compact-key win blocking measured, operators/blocking.py
-    BlockingConfig.compact_keys; VERDICT r02 finding #5).  A rare hash
+    (VERDICT r02 finding #5).  A rare hash
     collision merely merges two buckets — extra candidates are scored
     exactly downstream, so recall is unaffected.
 

@@ -56,14 +56,6 @@ class BlockingConfig:
     hot_threshold: int = 2000     # either-side key freq that triggers salting
     num_salts: int = 16
     max_key_freq: int | None = 100_000  # stop-key cap (None = keep all)
-    # Fold every key string to xxhash64 long before the join: the blocking
-    # shuffle then ships (long, long) rows instead of (string ~20-40 B,
-    # long) — the single biggest byte stream in the hot path.  A hash
-    # collision merely merges two buckets (extra candidate pairs, scored
-    # and filtered downstream), so recall is unaffected.  Off by default
-    # because the emitted blocking_key becomes a long (the F1-at-shared-
-    # key evaluation and stage schemas keep human-readable string keys).
-    compact_keys: bool = False
 
     @property
     def rows_per_band(self) -> int:
@@ -119,12 +111,6 @@ def blocking_keys(
         gram_keys,
         band_keys,
     )
-    if conf.compact_keys:
-        compacted = F.transform(
-            F.filter(F.array_distinct(all_keys), lambda k: k != F.lit("x:")),
-            lambda k: F.xxhash64(k),
-        )
-        return with_sig.select("id", F.explode(compacted).alias("key"))
     return with_sig.select(
         "id", F.explode(F.array_distinct(all_keys)).alias("key")
     ).where(F.col("key") != "x:")

@@ -672,7 +672,7 @@ def simhash_pairs(
     fp.count()  # eager: consumed by band keys + both verification joins
     # (band idx, 16-bit band value) folded to ONE xxhash64 bigint — the
     # bucket exchange ships two fixed-width longs per row, never strings
-    # (compact_keys / ann.py lesson; VERDICT r03 #2).  A 64-bit collision
+    # (the ann.py lesson; VERDICT r03 #2).  A 64-bit collision
     # across bands only adds a candidate the Hamming verify rejects.
     band_arr = F.array(
         *[

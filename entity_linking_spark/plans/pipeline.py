@@ -57,10 +57,6 @@ class PipelineConfig:
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
     scoring: ScoringConfig = field(default_factory=ScoringConfig)
     strict_extract: bool = True
-    # Feature tables below this row count score via the broadcast-indexed
-    # plan (id pairs + matrix broadcasts — no shuffle of embedding-laden
-    # rows); above it, the join-attached fused-UDF plan (web scale).
-    broadcast_feature_rows: int = 500_000
 
 
 def prepare_mentions(pages: DataFrame, mentions: DataFrame, context_size: int) -> DataFrame:
@@ -77,8 +73,8 @@ def prepare_mentions(pages: DataFrame, mentions: DataFrame, context_size: int) -
         ctx.alias("context"),
     )
     return prepped.withColumn(
-        # packed float32 bytes — feeds the fused scoring UDF
-        # (operators/scoring.py:score_pairs_fused)
+        # packed float32 bytes — operators/scoring.py:score_pairs gathers
+        # or unpacks them in its one scoring UDF
         "embedding",
         embed_text_binary(F.concat_ws(" | ", "norm_surface", "context")),
     )
@@ -147,38 +143,13 @@ def link_entities(
     cands = cat.get_or_compute("candidates", compute_candidates, resume)
 
     def compute_scored() -> DataFrame:
-        out_cols = [
-            "mention_id", "entity_id", "blocking_key",
-            "cosine", "jaro_winkler", "lev_sim", "score",
-        ]
-        # Plan selection mirrors Catalyst's broadcast-vs-shuffle decision,
-        # but at the operator level: dimension-sized feature tables go
-        # through the indexed scorer (id-pair stream only).  The sizes are
-        # the manifest counts the catalog just recorded (present on resume
-        # too) — no count job.
-        if (
-            cat.manifest_entry("mentions_prepared")["rows"]
-            <= cfg.broadcast_feature_rows
-            and cat.manifest_entry("entities_prepared")["rows"]
-            <= cfg.broadcast_feature_rows
-        ):
-            from entity_linking_spark.operators.scoring import score_pairs_broadcast
-
-            return score_pairs_broadcast(
-                cands, m_prep, e_prep, conf=cfg.scoring
-            ).select(*out_cols)
-        m_side = m_prep.select(
-            "mention_id",
-            F.col("norm_surface").alias("surf_a"),
-            F.col("embedding").alias("emb_a"),
+        # the manifest row counts the catalog just recorded (present on
+        # resume too) pick the scoring plan — no count job
+        feature_rows = max(
+            cat.manifest_entry(stage)["rows"]
+            for stage in ("mentions_prepared", "entities_prepared")
         )
-        e_side = e_prep.select(
-            "entity_id",
-            F.col("norm_title").alias("surf_b"),
-            F.col("embedding").alias("emb_b"),
-        )
-        pairs = cands.join(m_side, "mention_id").join(e_side, "entity_id")
-        return score_pairs(pairs, conf=cfg.scoring).select(*out_cols)
+        return score_pairs(cands, m_prep, e_prep, cfg.scoring, feature_rows=feature_rows)
 
     scored = cat.get_or_compute("scored", compute_scored, resume)
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -268,20 +269,16 @@ def main() -> int:
         conf,
     )._jdf.queryExecution().executedPlan().toString()
     # blocking_keys projects norm/grams/sig once per row (CLAUDE.md rule
-    # 6): one MinHash aggregate and one normalize regexp per plan, in
-    # both key encodings
-    key_plans = [
-        blocking_keys(m, "mention_id", "s", BlockingConfig(compact_keys=compact))
+    # 6): one MinHash aggregate and one normalize regexp per plan
+    key_plan = (
+        blocking_keys(m, "mention_id", "s", BlockingConfig())
         ._jdf.queryExecution().executedPlan().toString()
-        for compact in (False, True)
-    ]
+    )
     lines.append("## blocking (key generation, stage-table hot-key mode)")
     for desc, ok in [
         ("blocking_keys computes each expensive column once per row: "
-         "exactly one aggregate( and one regexp_replace( in the plan "
-         "(compact_keys False and True)",
-         all(p.count("aggregate(") == 1 and p.count("regexp_replace(") == 1
-             for p in key_plans)),
+         "exactly one aggregate( and one regexp_replace( in the plan",
+         key_plan.count("aggregate(") == 1 and key_plan.count("regexp_replace(") == 1),
         ("hot-key classification is distributed: no driver-collected key "
          "list re-enters the plan (no LocalTableScan / ExistingRDD[key)",
          "LocalTableScan" not in stage_plan and "ExistingRDD[key" not in stage_plan),
@@ -303,6 +300,44 @@ def main() -> int:
         lines.append(f"- [{mark}] {desc}")
         if not ok:
             failures.append(f"blocking-stage-mode: {desc}")
+    lines.append("")
+
+    # Scoring — not an entry query either: both plans of score_pairs over
+    # prepared stages read back from parquet, as link_entities reads them
+    from entity_linking_spark.fixtures import fixture_dataframes, generate_fixture
+    from entity_linking_spark.operators.scoring import (
+        BROADCAST_FEATURE_ROWS, score_pairs,
+    )
+    from entity_linking_spark.plans.pipeline import prepare_entities, prepare_mentions
+
+    pages, mentions, entities, _ = fixture_dataframes(
+        spark, generate_fixture(num_pages=20, num_entities=10, seed=42)
+    )
+    stage_dir = tempfile.mkdtemp(prefix="el_audit_scoring_")
+    prepare_mentions(pages, mentions, 32).write.parquet(f"{stage_dir}/m")
+    prepare_entities(entities).write.parquet(f"{stage_dir}/e")
+    m_prep, e_prep = spark.read.parquet(f"{stage_dir}/m"), spark.read.parquet(f"{stage_dir}/e")
+    cands = m_prep.select("mention_id", "entity_id")
+    bc_plan, join_plan = (
+        score_pairs(cands, m_prep, e_prep, feature_rows=rows)
+        ._jdf.queryExecution().executedPlan().toString()
+        for rows in (0, BROADCAST_FEATURE_ROWS + 1)
+    )
+    shutil.rmtree(stage_dir)
+    lines.append("## scoring (score_pairs, broadcast-indexed and join-attached plans)")
+    for desc, ok in [
+        ("one Arrow crossing per pair: exactly one ArrowEvalPython node in "
+         "each plan (CLAUDE.md rule 1)",
+         bc_plan.count("ArrowEvalPython") == 1
+         and join_plan.count("ArrowEvalPython") == 1),
+        ("the broadcast-indexed plan streams ids and surfaces only: no "
+         "embedding column anywhere in its executed plan",
+         "embedding" not in bc_plan),
+    ]:
+        mark = "x" if ok else " "
+        lines.append(f"- [{mark}] {desc}")
+        if not ok:
+            failures.append(f"scoring: {desc}")
     lines.append("")
 
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),

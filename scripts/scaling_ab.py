@@ -50,12 +50,6 @@ VARIANTS: dict[str, dict[str, str]] = {
     "spill_nocomp": {
         "SPARK_GRAFT_EXTRA_CONF": "spark.shuffle.spill.compress=false",
     },
-    "scoring_stage": {
-        # materialize the feature-joined pair table as a columnar stage so
-        # the scoring stage is scan→UDF→sink with no broadcast probes
-        # (VERDICT r03 #3); write+read-back happens inside the timed region
-        "SPARK_GRAFT_SCORING_STAGE": "1",
-    },
 }
 
 

@@ -64,15 +64,15 @@ def test_null_surface_rows_still_generate_candidates(spark):
     e = spark.createDataFrame(
         [(10, None), (20, "acme corp")], "entity_id long, s string"
     )
-    for conf in (BlockingConfig(), BlockingConfig(compact_keys=True)):
-        mk = blocking_keys(m, "mention_id", "s", conf)
-        ek = blocking_keys(e, "entity_id", "s", conf)
-        got = {
-            (r["mention_id"], r["entity_id"])
-            for r in candidate_pairs(mk, ek, conf).collect()
-        }
-        assert (1, 10) in got, conf
-        assert (2, 20) in got, conf
+    conf = BlockingConfig()
+    mk = blocking_keys(m, "mention_id", "s", conf)
+    ek = blocking_keys(e, "entity_id", "s", conf)
+    got = {
+        (r["mention_id"], r["entity_id"])
+        for r in candidate_pairs(mk, ek, conf).collect()
+    }
+    assert (1, 10) in got
+    assert (2, 20) in got
 
 
 def test_salting_does_not_change_pair_set(spark, fixture_dfs):
@@ -132,25 +132,6 @@ def test_mixed_skew_both_salted_branches(spark):
     assert p_salted.exceptAll(p_plain).count() == 0
     assert p_plain.exceptAll(p_salted).count() == 0
     assert p_salted.count() == 30 * 2 + 2 * 30
-
-
-def test_compact_keys_same_pair_set(spark, fixture_dfs):
-    """compact_keys folds keys to xxhash64 longs; modulo (astronomically
-    unlikely) collisions the candidate pair set is identical — and the
-    salted path still works on long keys."""
-    base = BlockingConfig()
-    compact = BlockingConfig(compact_keys=True)
-    compact_salted = BlockingConfig(compact_keys=True, hot_threshold=0)
-    mk_s, ek_s = _keys(spark, fixture_dfs, base)
-    mk_c, ek_c = _keys(spark, fixture_dfs, compact)
-    assert dict(mk_c.dtypes)["key"] == "bigint"
-    p_str = candidate_pairs(mk_s, ek_s, base).select("mention_id", "entity_id")
-    p_cmp = candidate_pairs(mk_c, ek_c, compact).select("mention_id", "entity_id")
-    p_slt = candidate_pairs(mk_c, ek_c, compact_salted).select("mention_id", "entity_id")
-    assert p_str.exceptAll(p_cmp).count() == 0
-    assert p_cmp.exceptAll(p_str).count() == 0
-    assert p_cmp.exceptAll(p_slt).count() == 0
-    assert p_slt.exceptAll(p_cmp).count() == 0
 
 
 def test_stage_table_hot_key_mode_pair_parity(spark, tmp_path):
@@ -251,7 +232,7 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-@pytest.mark.parametrize("compact", [False, True])
+@pytest.mark.parametrize("compact", [False])  # string keys, the one key encoding
 def test_blocking_keys_plan_computes_each_expensive_column_once(spark, compact):
     """norm, grams and sig are projected once per row: the executed plan
     holds one MinHash ``aggregate`` and one ``regexp_replace`` (the
@@ -260,7 +241,7 @@ def test_blocking_keys_plan_computes_each_expensive_column_once(spark, compact):
     HOF trees get no subexpression elimination (CLAUDE.md rule 6)."""
     df = spark.createDataFrame([(1, "acme corp")], "id long, s string")
     plan = _executed_plan(
-        blocking_keys(df, "id", "s", BlockingConfig(compact_keys=compact))
+        blocking_keys(df, "id", "s", BlockingConfig())
     )
     assert plan.count("aggregate(") == 1, plan
     assert plan.count("regexp_replace(") == 1, plan
@@ -271,7 +252,6 @@ def test_blocking_keys_plan_computes_each_expensive_column_once(spark, compact):
 # rewrite must emit exactly the same (id, key) rows
 _PARITY_DIGESTS = {
     False: (88, "4cc87e81d3b2e108d7e1af1c63a4f2a84961e453084e775b9525c7a4175a1d6f"),
-    True: (88, "f323ab39d04e77e5d4d98fdb3147833ae9e4cd248e2da32d1dea5cda9f864d73"),
 }
 _PARITY_ROWS = [
     (1, None),                                   # NULL surface
@@ -284,10 +264,10 @@ _PARITY_ROWS = [
 ]
 
 
-@pytest.mark.parametrize("compact", [False, True])
+@pytest.mark.parametrize("compact", [False])  # string keys, the one key encoding
 def test_blocking_keys_match_golden_digest(spark, compact):
     df = spark.createDataFrame(_PARITY_ROWS, "id long, s string")
-    rows = blocking_keys(df, "id", "s", BlockingConfig(compact_keys=compact)).collect()
+    rows = blocking_keys(df, "id", "s", BlockingConfig()).collect()
     lines = sorted(f"{r['id']}\t{r['key']}" for r in rows)
     digest = hashlib.sha256("\n".join(lines).encode()).hexdigest()
     assert (len(lines), digest) == _PARITY_DIGESTS[compact]
